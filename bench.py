@@ -86,7 +86,7 @@ def bench_cdc_replay(
     from cassandra_data_migrator_spark.jobs import ingest
 
     t0 = time.time()
-    ingest(spark, cfg, changelog_df=ev, mode="mor", compact_every=8)
+    ingest(spark, cfg, changelog_df=ev, compact_every=8)
     dt = time.time() - t0
     # verify the replay actually landed (not part of the timing)
     n_keys = LakeTable(spark, cfg.lake_path).read().count()
@@ -125,8 +125,7 @@ def headline_queries(spark) -> tuple[dict[str, float], dict[str, list[float]]]:
             emb, emb.where(F.col("vec_id") < 5), k=5
         ),
         # headline near-dup path = LSH-bucket-blocked exact cosine (the
-        # 100 TB shape); cosine_near_pairs_fast (driver-broadcast matmul)
-        # is deliberately NOT a headline — it is the medium-scale variant
+        # 100 TB shape)
         "embed_cosine_pairs_lsh": lambda: similarity.cosine_near_pairs(
             emb.withColumn(
                 "_bkt", similarity.hyperplane_bucket_expr("embedding", 64, 4)

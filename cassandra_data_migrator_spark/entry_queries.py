@@ -127,7 +127,7 @@ def q_cdc_replay_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .jobs import ingest
     from .sources.lake import LakeTable
 
-    ingest(spark, cfg, changelog_df=ev, mode="mor")
+    ingest(spark, cfg, changelog_df=ev)
     out = LakeTable(spark, cfg.lake_path).read()
     return out.select("url", "seq", "event_type", "value")
 
@@ -160,7 +160,7 @@ def q_lake_changed_since(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .jobs import ingest
     from .sources.lake import LakeTable
 
-    ingest(spark, cfg, changelog_df=ev, mode="mor")
+    ingest(spark, cfg, changelog_df=ev)
     cutoff = dt.datetime.fromisoformat(_CHANGED_SINCE_CUTOFF)
     out = LakeTable(spark, cfg.lake_path).scan_changes(ts_lower=cutoff)
     return out.select("url", "seq", "op", "event_type", "value")
@@ -2191,9 +2191,11 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL; the Spark side pulls the bounded dims-row stats frame to the
     driver and quantizes map-side against literal arrays — bit-
     identical because every step is a single IEEE double op on
-    losslessly-promoted float32 values."""
+    losslessly-promoted float32 values. The codes are returned
+    comma-joined, a hashable scalar column."""
     embx = t(spark, sf_dir, "embeddings")
-    return similarity.scalar_quantize(embx, "vec_id", "embedding")
+    q = similarity.scalar_quantize(embx, "vec_id", "embedding")
+    return q.withColumn("q", F.concat_ws(",", F.col("q").cast("array<string>")))
 
 
 SQL_EMBED_QUANTIZE = """
@@ -2211,8 +2213,8 @@ s AS (
   FROM d
 )
 SELECT e.vec_id,
-  list(CAST(FLOOR((CAST(e.v AS DOUBLE) - s.mnd) * s.sc + 0.5) AS INT)
-       ORDER BY e.i) AS q
+  array_to_string(list(CAST(FLOOR((CAST(e.v AS DOUBLE) - s.mnd) * s.sc + 0.5) AS INT)
+       ORDER BY e.i), ',') AS q
 FROM e JOIN s USING (i)
 GROUP BY e.vec_id
 """
@@ -2921,12 +2923,14 @@ _WINNOW_W = 4
 def q_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing (MOSS) local fingerprint: sorted distinct per-window
     k-gram hash minima as the doc sketch — map-side HOF folds, zero
-    shuffles; positionally robust unlike the whole-doc hash."""
+    shuffles; positionally robust unlike the whole-doc hash. The sketch
+    is returned comma-joined, a hashable scalar column."""
     docs = t(spark, sf_dir, "documents")
-    return textops.winnow_fingerprint(
+    fp = textops.winnow_fingerprint(
         docs, "text", "doc_id", k=_WINNOW_K, window=_WINNOW_W,
         hash_mode="portable",
     )
+    return fp.withColumn("sketch", F.concat_ws(",", F.col("sketch").cast("array<string>")))
 
 
 _WINNOW_GRAM_SQL = portable_hash_sql(f"substring(text, p, {_WINNOW_K})")
@@ -2939,9 +2943,9 @@ WITH g AS (
   FROM documents WHERE length(text) >= {_WINNOW_K}
 )
 SELECT doc_id, CAST(m AS BIGINT) AS n_grams,
-  list_sort(list_distinct(list_transform(
+  array_to_string(list_sort(list_distinct(list_transform(
     generate_series(1, greatest(m - {_WINNOW_W - 1}, 1)),
-    j -> list_min(list_slice(hs, j, j + {_WINNOW_W - 1}))))) AS sketch,
+    j -> list_min(list_slice(hs, j, j + {_WINNOW_W - 1}))))), ',') AS sketch,
   CAST(len(list_distinct(list_transform(
     generate_series(1, greatest(m - {_WINNOW_W - 1}, 1)),
     j -> list_min(list_slice(hs, j, j + {_WINNOW_W - 1}))))) AS BIGINT)

@@ -98,7 +98,3 @@ def hyperplane_signs(dims: int, planes: int) -> list[list[float]]:
 
 def perm_expr(h: Column, a: int, b: int) -> Column:
     return (h * F.lit(a) + F.lit(b)) % F.lit(P_MOD)
-
-
-def perm_sql(hexpr: str, a: int, b: int) -> str:
-    return f"(({hexpr}) * {a} + {b}) % {P_MOD}"

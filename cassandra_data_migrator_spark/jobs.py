@@ -17,6 +17,8 @@ from __future__ import annotations
 
 import argparse
 import json
+from collections import deque
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -78,20 +80,23 @@ def ingest(
     spark: SparkSession,
     cfg: EngineConfig,
     changelog_df: DataFrame | None = None,
-    mode: str = "mor",
     compact_every: int = 8,
     lww_strategy: str = "skinny",
     fail_at_epoch: int | None = None,
 ) -> RunResult:
     """Replay the WAL epoch-by-epoch into the lake table (Migrate analog).
 
+    Each epoch's winners land as a merge-on-read delta; every
+    ``compact_every`` epochs, and once at the end, ``compact()`` folds
+    the deltas into the base.
+
     ``lww_strategy``: 'skinny' (default — winner-seq agg + AQE-broadcast
     semi join; never sorts/shuffles payload bytes, 5x faster at 10^7-row
-    epochs), 'max_by' (single agg; fine for small epochs), 'salted'
-    (two-phase fold for degenerate single-key skew), or 'auto' (per
-    epoch, a cheap key-count aggregation — column-pruned scan, map-side
-    combine, O(distinct keys) shuffle — picks 'salted' when one key
-    exceeds max(cfg.skew_min_rows, rows/num_partitions), else 'skinny';
+    epochs), 'salted' (two-phase fold for degenerate single-key skew),
+    or 'auto' (per epoch, a cheap key-count aggregation — column-pruned
+    scan, map-side combine, O(distinct keys) shuffle — picks 'salted'
+    when one key exceeds max(cfg.skew_min_rows, rows/num_partitions),
+    else 'skinny';
     decisions land in ``RunResult.epochs_salted``).
     ``fail_at_epoch`` injects a crash *after* that many epochs committed,
     for the kill-and-resume test.
@@ -124,7 +129,6 @@ def ingest(
     done = 0
     strategies = {
         "skinny": lambda df: lww_dedup_skinny(df, cfg.key_col, cfg.ts_col, cfg.seq_col),
-        "max_by": lambda df: lww_dedup(df, cfg.key_col, cfg.ts_col, cfg.seq_col),
         "salted": lambda df: lww_dedup_salted(
             df, cfg.key_col, cfg.ts_col, cfg.seq_col, cfg.salt_buckets
         ),
@@ -245,65 +249,52 @@ def ingest(
         nonlocal done, need_compact
         result.epochs_applied.append(epoch)
         done += 1
-        if mode == "mor" and compact_every and done % compact_every == 0:
+        if compact_every and done % compact_every == 0:
             need_compact = True
         if fail_at_epoch is not None and done >= fail_at_epoch:
             raise RuntimeError(f"injected failure after {done} epochs")
 
-    if mode == "cow":
-        # CoW merges read the previous commit's files — inherently serial
+    # two-deep epoch pipeline: epoch k+1's scan+filter+LWW (the
+    # Spark-heavy part) STAGES on a worker thread while epoch k's
+    # manifest commit + lineage run — the serial epoch loop was the
+    # measured residual in the N->4N scaling evidence.
+    # Commits stay strictly ordered, so resume/exactly-once semantics
+    # are unchanged; a staged-but-uncommitted slice is an orphan dir.
+    def stage(batch, grp, epoch):
+        deduped, o_r, o_w = prepare_slice(batch, grp, epoch)
+        return lake.stage_delta(deduped), o_r, o_w
+
+    pool = ThreadPoolExecutor(max_workers=2)
+    inflight: deque = deque()  # (epoch, grp, is_last, future)
+
+    def commit_one() -> None:
+        epoch, grp, is_last, fut = inflight.popleft()
+        staged, o_r, o_w = fut.result()
+        keys = [f"{p}:{epoch}" for p in grp]
+        finish_slice(
+            grp, epoch, o_r, o_w, lambda: lake.commit_staged_delta(staged, keys)
+        )
+        if is_last:
+            after_epoch_committed(epoch)
+
+    try:
         for epoch, grp, is_last, batch in slices:
-            deduped, o_r, o_w = prepare_slice(batch, grp, epoch)
-            keys = [f"{p}:{epoch}" for p in grp]
-            finish_slice(grp, epoch, o_r, o_w, lambda: lake.merge_cow(deduped, keys))
-            if is_last:
-                after_epoch_committed(epoch)
-    else:
-        # two-deep epoch pipeline: epoch k+1's scan+filter+LWW (the
-        # Spark-heavy part) STAGES on a worker thread while epoch k's
-        # manifest commit + lineage run — the serial epoch loop was the
-        # measured residual in the N->4N scaling evidence (VERDICT r1 #6).
-        # Commits stay strictly ordered, so resume/exactly-once semantics
-        # are unchanged; a staged-but-uncommitted slice is an orphan dir.
-        from collections import deque
-        from concurrent.futures import ThreadPoolExecutor
-
-        def stage(batch, grp, epoch):
-            deduped, o_r, o_w = prepare_slice(batch, grp, epoch)
-            return lake.stage_delta(deduped), o_r, o_w
-
-        pool = ThreadPoolExecutor(max_workers=2)
-        inflight: deque = deque()  # (epoch, grp, is_last, future)
-
-        def commit_one() -> None:
-            epoch, grp, is_last, fut = inflight.popleft()
-            staged, o_r, o_w = fut.result()
-            keys = [f"{p}:{epoch}" for p in grp]
-            finish_slice(
-                grp, epoch, o_r, o_w, lambda: lake.commit_staged_delta(staged, keys)
-            )
-            if is_last:
-                after_epoch_committed(epoch)
-
-        try:
-            for epoch, grp, is_last, batch in slices:
-                inflight.append((epoch, grp, is_last, pool.submit(stage, batch, grp, epoch)))
-                while len(inflight) >= 2:
-                    commit_one()
-                if need_compact:
-                    # drain before compacting: compaction's manifest swap
-                    # must not race a staged commit
-                    while inflight:
-                        commit_one()
-                    lake.compact()
-                    need_compact = False
-            while inflight:
+            inflight.append((epoch, grp, is_last, pool.submit(stage, batch, grp, epoch)))
+            while len(inflight) >= 2:
                 commit_one()
-        finally:
-            pool.shutdown(wait=False, cancel_futures=True)
+            if need_compact:
+                # drain before compacting: compaction's manifest swap
+                # must not race a staged commit
+                while inflight:
+                    commit_one()
+                lake.compact()
+                need_compact = False
+        while inflight:
+            commit_one()
+    finally:
+        pool.shutdown(wait=False, cancel_futures=True)
 
-    if mode == "mor":
-        lake.compact()
+    lake.compact()
     if lin and cfg.track_run:
         lin.end_run(cfg.run_id, "MIGRATE", total.as_dict())
     result.lake_version = lake.manifest().version
@@ -455,7 +446,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--lake", dest="lake_path")
     p.add_argument("--changelog", dest="changelog_path")
     p.add_argument("--lineage", dest="lineage_path", default="")
-    p.add_argument("--mode", choices=["mor", "cow"], default="mor")
     p.add_argument("--events", type=int, default=1_000_000)
     p.add_argument("--epoch-size", type=int, default=100_000)
     p.add_argument("--autocorrect", action="store_true")
@@ -472,7 +462,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--no-track-run", dest="track_run", action="store_false",
                    default=None, help="disable run-details lineage writes")
     p.add_argument("--lww-strategy", dest="lww_strategy",
-                   choices=["skinny", "max_by", "salted", "auto"], default="skinny")
+                   choices=["skinny", "salted", "auto"], default="skinny")
     p.add_argument("--where", dest="where_condition", default=None,
                    help="user WHERE condition pushed into the scan")
     p.add_argument("--filter-column", dest="filter_column", default=None)
@@ -529,7 +519,7 @@ def main(argv: list[str] | None = None) -> int:
                            num_partitions=cfg.num_partitions)
         wal.write_changelog(df, cfg.changelog_path)
     elif args.job == "ingest":
-        ingest(spark, cfg, mode=args.mode, lww_strategy=args.lww_strategy)
+        ingest(spark, cfg, lww_strategy=args.lww_strategy)
     elif args.job == "validate":
         validate(spark, cfg, autocorrect=args.autocorrect)
     elif args.job == "guardrail":

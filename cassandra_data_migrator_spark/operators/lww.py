@@ -7,12 +7,16 @@ is the tie-break, `WritetimeTTL.java:244`). Against a lake sink the
 resolution must be explicit: per key, keep the event with the largest
 ``(ts, seq)``.
 
-Two strategies, both pure DataFrame:
+Three strategies, all pure DataFrame, all ranking by the one
+``(ts, seq)`` order struct built by ``_order``:
 
 * ``lww_dedup`` — single ``groupBy(key).agg(max_by(payload, (ts, seq)))``.
-  Spark's hash aggregate does map-side partial merge, so even a hot key
-  contributes at most one row per input partition to the final shuffle;
-  this is the default.
+  Spark's partial aggregation merges map-side, so even a hot key
+  contributes at most one row per input partition to the final shuffle.
+  This is the verify fold (``jobs.expected_state``) and the lake
+  table's fold (read-time resolve, compaction, CoW merge).
+* ``lww_dedup_skinny`` — winner-seq aggregate + semi join; never sorts
+  the payload. The ``jobs.ingest`` default.
 * ``lww_dedup_salted`` — explicit two-phase (salt, key) → key fold for
   the degenerate case where a single key dominates entire input
   partitions (Zipf head at 10^10 events). Equivalent result, bounded
@@ -25,12 +29,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _payload(df: DataFrame):
-    return F.struct(*[F.col(c) for c in df.columns])
+def _payload(df: DataFrame, tie_col: str | None = None):
+    return F.struct(*[F.col(c) for c in df.columns if c != tie_col])
 
 
-def _order(ts_col: str, seq_col: str):
-    return F.struct(F.col(ts_col), F.col(seq_col))
+def _order(ts_col: str, seq_col: str, tie_col: str | None = None):
+    return F.struct(*[F.col(c) for c in (ts_col, seq_col, tie_col) if c])
 
 
 def lww_dedup(
@@ -38,11 +42,15 @@ def lww_dedup(
     key_col: str = "url",
     ts_col: str = "warc_ts",
     seq_col: str = "seq",
+    tie_col: str | None = None,
 ) -> DataFrame:
-    """One row per key: the event with the largest (ts, seq)."""
+    """One row per key: the event with the largest (ts, seq).
+
+    ``tie_col`` breaks exact (ts, seq) ties (ordered after seq) and is
+    left out of the output."""
     return (
         df.groupBy(key_col)
-        .agg(F.max_by(_payload(df), _order(ts_col, seq_col)).alias("_w"))
+        .agg(F.max_by(_payload(df, tie_col), _order(ts_col, seq_col, tie_col)).alias("_w"))
         .select("_w.*")
     )
 
@@ -63,10 +71,9 @@ def lww_dedup_salted(
     salted = df.withColumn(
         "_salt", F.pmod(F.xxhash64(F.col(seq_col), F.lit("salt")), F.lit(salt_buckets))
     )
-    payload = F.struct(*[F.col(c) for c in df.columns])
     phase1 = (
         salted.groupBy(key_col, "_salt")
-        .agg(F.max_by(payload, _order(ts_col, seq_col)).alias("_w"))
+        .agg(F.max_by(_payload(df), _order(ts_col, seq_col)).alias("_w"))
         .select("_w.*")
     )
     return lww_dedup(phase1, key_col, ts_col, seq_col)

@@ -388,56 +388,6 @@ def ivf_topk(
     )
 
 
-def cosine_near_pairs_fast(
-    emb: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Vectorized all-pairs cosine via broadcast matrix multiply.
-
-    The corpus matrix is L2-normalized once on the driver and broadcast
-    (fits when N*dims*4 bytes is broadcast-sized — e.g. 10^6 x 64 =
-    256 MB); each Arrow batch then scores against it with one numpy
-    matmul inside ``mapInPandas``. For corpora beyond broadcast size use
-    ``cosine_near_pairs`` with an LSH ``block_col`` instead — this is
-    the medium-scale fast path, not the 10^10 path.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    rows = emb.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    sc = emb.sparkSession.sparkContext
-    b_ids = sc.broadcast(ids)
-    b_mat = sc.broadcast(mat)
-
-    schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        all_ids, all_mat = b_ids.value, b_mat.value
-        for pdf in batches:
-            q = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            q /= np.linalg.norm(q, axis=1, keepdims=True)
-            qids = pdf[id_col].to_numpy(dtype=np.int64)
-            sims = q @ all_mat.T
-            ii, jj = np.nonzero((sims >= threshold) & (qids[:, None] < all_ids[None, :]))
-            yield pd.DataFrame(
-                {"id_a": qids[ii], "id_b": all_ids[jj], "cosine": sims[ii, jj]}
-            )
-
-    return emb.select(id_col, vec_col).mapInPandas(score, schema)
-
-
 def scalar_quantize(
     emb: DataFrame,
     id_col: str = "vec_id",

@@ -530,6 +530,10 @@ def doc_chunks(
     fanout — sequence + slice HOFs inside whole-stage codegen, zero
     shuffles, embarrassingly parallel at any scale.
     """
+    if not 1 <= stride <= chunk_tokens:
+        # a larger stride would skip tokens and start trailing chunks
+        # past the end of the document
+        raise ValueError(f"stride must be in [1, chunk_tokens={chunk_tokens}], got {stride}")
     toks = df.select(F.col(id_col), tokens_expr(col).alias("_w")).where(
         F.size("_w") > 0
     )

@@ -7,14 +7,12 @@ to its first ``coveragePercent`` for sampled validation (:66-68), and
 drives one Spark task per range.
 
 In the Spark-first build the *data* partitioning is Catalyst's job; the
-token plan survives as (a) the key-hash space used for commit keys and
-skew salting, and (b) predicate helpers that prune a scan to a token
-range — which Catalyst pushes into the parquet/lake scan.
+token plan survives as predicates over the key-hash token space: the
+``min_token``/``max_token`` run restriction and the ``coverage_percent``
+sample, both pushed by Catalyst into the parquet/lake scan.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -30,35 +28,6 @@ def token_expr(key_col: str) -> Column:
     return F.abs(F.xxhash64(F.col(key_col)))
 
 
-@dataclass
-class TokenRange:
-    min_token: int
-    max_token: int  # inclusive, like CDM's TOKEN(pk) <= ?
-
-
-def split_token_ranges(num_parts: int, coverage_percent: int = 100) -> list[TokenRange]:
-    """Even split of [0, TOKEN_SPACE) into num_parts ranges; each range
-    optionally shrunk to its first coverage_percent."""
-    if not 1 <= coverage_percent <= 100:
-        raise ValueError("coverage_percent must be in [1, 100]")
-    step = TOKEN_SPACE // num_parts
-    ranges = []
-    for i in range(num_parts):
-        lo = i * step
-        hi = TOKEN_SPACE - 1 if i == num_parts - 1 else (i + 1) * step - 1
-        if coverage_percent < 100:
-            hi = lo + max(0, (hi - lo) * coverage_percent // 100)
-        ranges.append(TokenRange(lo, hi))
-    return ranges
-
-
-def in_token_range(key_col: str, r: TokenRange) -> Column:
-    """Pushdown-able predicate: TOKEN(pk) >= min AND TOKEN(pk) <= max
-    (OriginSelectByPartitionRangeStatement.java:52-56)."""
-    t = token_expr(key_col)
-    return (t >= F.lit(r.min_token)) & (t <= F.lit(r.max_token))
-
-
 def coverage_filter(key_col: str, coverage_percent: int) -> Column:
     """Sampled-scan predicate: keep keys whose token falls in the first
     coverage_percent of the space (coveragePercent analog)."""
@@ -67,12 +36,3 @@ def coverage_filter(key_col: str, coverage_percent: int) -> Column:
     cutoff = TOKEN_SPACE // 100 * coverage_percent
     return token_expr(key_col) < F.lit(cutoff)
 
-
-def partition_expr(key_col: str, num_partitions: int) -> Column:
-    """Key-hash partition id (the stream's token-range analog)."""
-    return F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_partitions)).cast("int")
-
-
-def salt_expr(salt_source_col: str, salt_buckets: int) -> Column:
-    """Deterministic salt for two-phase skew handling."""
-    return F.pmod(F.xxhash64(F.col(salt_source_col), F.lit("salt")), F.lit(salt_buckets))

@@ -25,10 +25,14 @@ engine needs, in the same shape Iceberg provides it:
     merging a batch with new columns widens it, and old files read
     through the widened schema yield nulls for the new columns (CDM's
     missing-column => unset semantics, ``CqlTable.java:408-428``).
-  * **copy-on-write and merge-on-read** — ``merge_cow`` rewrites affected
-    buckets; ``append_mor`` appends delta files and defers last-writer-
-    wins resolution to read time (Hudi/Iceberg MoR analog), with
-    ``compact()`` folding deltas into the base.
+  * **merge-on-read and copy-on-write** — ingest appends delta files
+    (``stage_delta`` + ``commit_staged_delta``, or ``append_mor``) and
+    defers last-writer-wins resolution to read time (Hudi/Iceberg MoR
+    analog), with ``compact()`` folding deltas into the base.
+    ``merge_cow`` (validate's autocorrect) and ``merge_counter`` rewrite
+    the affected buckets at once. Read-time resolve, compaction and the
+    CoW merge all fold with ``operators.lww.lww_dedup``; the merges and
+    compaction commit through one bucket-rewrite path.
 
 Rows are stored with their CDC system columns (``op``, ``warc_ts``,
 ``seq``); deletes persist as tombstones so a late-arriving older event
@@ -48,6 +52,8 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..operators.lww import _order, lww_dedup
 
 BUCKET_COL = "_bucket"
 GLOBAL_DELTA = "__global__"
@@ -370,27 +376,6 @@ class LakeTable:
                     )
         return by_bucket
 
-    PRECEDENCE_COL = "_prec"
-
-    def _lww_resolve(self, df: DataFrame, mf: Manifest) -> DataFrame:
-        """Keep, per key, the row with the largest (ts, seq[, precedence]).
-
-        Largest-writetime-wins with seq tie-break — the reference's row
-        timestamp semantics (``PKFactory.java:114-125``,
-        ``WritetimeTTL.java:235-258``; tie-break analog of
-        ``writetimeIncrement`` ``WritetimeTTL.java:244``). An optional
-        precedence column (added by force-merges) breaks exact (ts, seq)
-        ties in favor of the incoming batch, the autocorrect-overwrite
-        case.
-        """
-        cols = [c for c in df.columns if c not in (BUCKET_COL, self.PRECEDENCE_COL)]
-        payload = F.struct(*[F.col(c) for c in cols])
-        order_cols = [F.col(mf.ts_col), F.col(mf.seq_col)]
-        if self.PRECEDENCE_COL in df.columns:
-            order_cols.append(F.col(self.PRECEDENCE_COL))
-        winner = F.max_by(payload, F.struct(*order_cols)).alias("_w")
-        return df.groupBy(mf.key_col).agg(winner).select("_w.*")
-
     def _evolve_schema(self, mf: Manifest, batch_schema: T.StructType) -> Manifest:
         """Additively widen the table schema with new batch columns."""
         cur = mf.schema()
@@ -412,11 +397,48 @@ class LakeTable:
                 cols.append(F.lit(None).cast(f.dataType).alias(f.name))
         return df.select(*cols)
 
+    def _prepare_merge(
+        self, mf: Manifest, batch: DataFrame
+    ) -> tuple[Manifest, DataFrame, list[int]]:
+        """Shared prologue of the merges: widen the table schema for the
+        batch, align the batch to it, and list the buckets it touches."""
+        mf = self._evolve_schema(mf, batch.schema)
+        batch = self._align(batch, mf.schema())
+        affected = sorted(
+            r[0] for r in batch.select(bucket_expr(mf.key_col, mf.num_buckets))
+            .distinct().collect()
+        )
+        return mf, batch, affected
+
+    def _rewrite_buckets(
+        self, mf: Manifest, resolved: DataFrame, buckets: list[int], keys: list[str]
+    ) -> CommitResult:
+        """Shared commit tail of ``merge_cow``, ``merge_counter`` and
+        ``compact``: write ``resolved`` (the folded rows of ``buckets``)
+        bucketed, point every rewritten bucket at its new base files and
+        drop its deltas, record the commit keys, and publish.
+
+        Unbucketed (GLOBAL_DELTA) deltas are dropped too: ``compact``
+        folds them into ``resolved``, and the merges only run once there
+        are none."""
+        parent = mf.version
+        new_files = self._write_data(resolved, mf)
+        mf.stats.update(self._collect_stats(new_files, mf))
+        mf.version = parent + 1
+        rewritten = sorted(set(buckets) | {int(b) for b in new_files})
+        for b in rewritten:
+            mf.base[str(b)] = new_files.get(str(b), [])
+            mf.deltas.pop(str(b), None)
+        mf.deltas.pop(GLOBAL_DELTA, None)
+        mf.applied.extend(k for k in keys if k not in mf.applied)
+        self._swap(mf, expected_parent=parent)
+        return CommitResult(True, mf.version, buckets_rewritten=len(rewritten))
+
     # ------------------------------------------------------------- merge (CoW)
     def merge_cow(
         self, batch: DataFrame, commit_keys: list[str] | str, force: bool = False
     ) -> CommitResult:
-        """LWW-upsert a (pre-deduplicated) batch; rewrite affected buckets.
+        """LWW-upsert a batch; rewrite affected buckets.
 
         Iceberg ``MERGE INTO ... WHEN MATCHED UPDATE WHEN NOT MATCHED
         INSERT`` analog of the reference's upsert sink
@@ -435,35 +457,22 @@ class LakeTable:
             # buckets; fold them into the base before a bucket-scoped CoW
             self.compact()
             mf = self.manifest()
-        parent = mf.version
-        mf = self._evolve_schema(mf, batch.schema)
-        schema = mf.schema()
-        batch = self._align(batch, schema).withColumn(
-            BUCKET_COL, bucket_expr(mf.key_col, mf.num_buckets)
-        )
-        affected = sorted(
-            r[0] for r in batch.select(BUCKET_COL).distinct().collect()
-        )
+        mf, batch, affected = self._prepare_merge(mf, batch)
         existing = self._read_files(
             mf, self._files(mf, affected, "base") + self._files(mf, affected, "deltas")
-        ).withColumn(BUCKET_COL, bucket_expr(mf.key_col, mf.num_buckets))
+        )
+        tie = None
         if force:
             # batch wins exact (ts, seq) ties — autocorrect overwrite
             # (writetimeIncrement analog, WritetimeTTL.java:244)
-            existing = existing.withColumn(self.PRECEDENCE_COL, F.lit(0))
-            batch = batch.withColumn(self.PRECEDENCE_COL, F.lit(1))
-        merged = self._lww_resolve(
-            existing.unionByName(batch, allowMissingColumns=True), mf
+            tie = "_prec"
+            existing = existing.withColumn(tie, F.lit(0))
+            batch = batch.withColumn(tie, F.lit(1))
+        merged = lww_dedup(
+            existing.unionByName(batch, allowMissingColumns=True),
+            mf.key_col, mf.ts_col, mf.seq_col, tie_col=tie,
         )
-        new_files = self._write_data(merged, mf)
-        mf.stats.update(self._collect_stats(new_files, mf))
-        mf.version = parent + 1
-        for b in affected:
-            mf.base[str(b)] = new_files.get(str(b), [])
-            mf.deltas.pop(str(b), None)
-        mf.applied.extend(k for k in keys if k not in mf.applied)
-        self._swap(mf, expected_parent=parent)
-        return CommitResult(True, mf.version, buckets_rewritten=len(affected))
+        return self._rewrite_buckets(mf, merged, affected, keys)
 
     # ------------------------------------------------------------- counter merge
     def merge_counter(
@@ -498,44 +507,24 @@ class LakeTable:
                 "re-summing applied counter deltas would double-count — "
                 "re-drive with the batch filtered to unapplied keys only"
             )
-        parent = mf.version
-        mf = self._evolve_schema(mf, batch.schema)
-        schema = mf.schema()
-        batch = self._align(batch, schema).withColumn(
-            BUCKET_COL, bucket_expr(mf.key_col, mf.num_buckets)
-        )
-        affected = sorted(r[0] for r in batch.select(BUCKET_COL).distinct().collect())
+        mf, batch, affected = self._prepare_merge(mf, batch)
         if mf.deltas.get(GLOBAL_DELTA) or any(mf.deltas.get(str(b)) for b in affected):
             # counter tables are CoW-only: MoR delta files hold unresolved
             # row versions whose counter values would double-sum
             raise ValueError("merge_counter cannot run on buckets with MoR deltas")
-        existing = self._read_files(
-            mf, self._files(mf, affected, "base")
-        ).withColumn(BUCKET_COL, bucket_expr(mf.key_col, mf.num_buckets))
+        existing = self._read_files(mf, self._files(mf, affected, "base"))
         both = existing.unionByName(batch, allowMissingColumns=True)
-        other_cols = [
-            c for c in both.columns
-            if c not in counter_cols and c not in (mf.key_col, BUCKET_COL)
-        ]
+        other_cols = [c for c in both.columns if c not in counter_cols and c != mf.key_col]
         payload = F.struct(*[F.col(c) for c in other_cols])
-        order = F.struct(F.col(mf.ts_col), F.col(mf.seq_col))
         merged = (
             both.groupBy(mf.key_col)
             .agg(
-                F.max_by(payload, order).alias("_w"),
+                F.max_by(payload, _order(mf.ts_col, mf.seq_col)).alias("_w"),
                 *[F.sum(c).alias(c) for c in counter_cols],
             )
             .select(mf.key_col, *counter_cols, "_w.*")
         )
-        new_files = self._write_data(self._align(merged, schema), mf)
-        mf.stats.update(self._collect_stats(new_files, mf))
-        mf.version = parent + 1
-        for b in affected:
-            mf.base[str(b)] = new_files.get(str(b), [])
-            mf.deltas.pop(str(b), None)
-        mf.applied.extend(k for k in keys if k not in mf.applied)
-        self._swap(mf, expected_parent=parent)
-        return CommitResult(True, mf.version, buckets_rewritten=len(affected))
+        return self._rewrite_buckets(mf, self._align(merged, mf.schema()), affected, keys)
 
     # ------------------------------------------------------------- append (MoR)
     def stage_delta(self, batch: DataFrame) -> dict:
@@ -602,7 +591,6 @@ class LakeTable:
         later-arriving OLDER version of an expired row can resurrect the
         key until the next expiring compaction."""
         mf = self.manifest()
-        parent = mf.version
         has_global = bool(mf.deltas.get(GLOBAL_DELTA))
         with_deltas = sorted(
             int(b) for b in mf.deltas if b != GLOBAL_DELTA and mf.deltas[b]
@@ -618,8 +606,8 @@ class LakeTable:
         df = self._read_files(
             mf,
             self._files(mf, with_deltas, "base") + self._files(mf, with_deltas, "deltas"),
-        ).withColumn(BUCKET_COL, bucket_expr(mf.key_col, mf.num_buckets))
-        resolved = self._lww_resolve(df, mf)
+        )
+        resolved = lww_dedup(df, mf.key_col, mf.ts_col, mf.seq_col)
         ttl_col = mf.props.get("ttl_col")
         if expire_as_of is not None and ttl_col and ttl_col in resolved.columns:
             from ..functions.transforms import ttl_alive_predicate
@@ -627,16 +615,7 @@ class LakeTable:
             resolved = resolved.where(
                 ttl_alive_predicate(mf.ts_col, ttl_col, expire_as_of)
             )
-        new_files = self._write_data(resolved, mf)
-        mf.stats.update(self._collect_stats(new_files, mf))
-        mf.version = parent + 1
-        rewritten = sorted(set(with_deltas) | {int(b) for b in new_files})
-        for b in rewritten:
-            mf.base[str(b)] = new_files.get(str(b), [])
-            mf.deltas.pop(str(b), None)
-        mf.deltas.pop(GLOBAL_DELTA, None)
-        self._swap(mf, expected_parent=parent)
-        return CommitResult(True, mf.version, buckets_rewritten=len(rewritten))
+        return self._rewrite_buckets(mf, resolved, with_deltas, [])
 
     def vacuum(self, retain_last: int = 1) -> int:
         """Physically delete data files referenced only by manifests
@@ -724,10 +703,7 @@ class LakeTable:
             deltas = self._read_files(mf, self._files(mf, buckets, "deltas"))
             df = base.unionByName(deltas, allowMissingColumns=True)
             if resolve:
-                df = df.withColumn(
-                    BUCKET_COL, bucket_expr(mf.key_col, mf.num_buckets)
-                )
-                df = self._lww_resolve(df, mf)
+                df = lww_dedup(df, mf.key_col, mf.ts_col, mf.seq_col)
         else:
             df = base
         if not include_tombstones and mf.op_col in df.columns:

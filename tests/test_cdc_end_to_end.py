@@ -53,10 +53,9 @@ def test_changelog_has_skew_and_evolution(spark, events):
     assert pre == 0 and post > 0
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_ingest_matches_expected_fold(spark, events, tmp_path, mode):
-    cfg = make_cfg(tmp_path / mode)
-    res = ingest(spark, cfg, changelog_df=events, mode=mode)
+def test_ingest_matches_expected_fold(spark, events, tmp_path):
+    cfg = make_cfg(tmp_path)
+    res = ingest(spark, cfg, changelog_df=events)
     assert res.counters.get("READ") == N_EVENTS
     lake = LakeTable(spark, cfg.lake_path)
     actual = lake.read()
@@ -70,7 +69,7 @@ def test_ingest_matches_expected_fold(spark, events, tmp_path, mode):
 
 def test_validate_green(spark, events, tmp_path):
     cfg = make_cfg(tmp_path)
-    ingest(spark, cfg, changelog_df=events, mode="mor")
+    ingest(spark, cfg, changelog_df=events)
     d, jc = validate(spark, cfg, changelog_df=events)
     assert jc.get("MISSING") == 0
     assert jc.get("MISMATCH") == 0
@@ -80,26 +79,26 @@ def test_validate_green(spark, events, tmp_path):
 def test_kill_and_resume_no_duplicates(spark, events, tmp_path):
     cfg = make_cfg(tmp_path)
     with pytest.raises(RuntimeError, match="injected failure"):
-        ingest(spark, cfg, changelog_df=events, mode="mor", fail_at_epoch=3)
+        ingest(spark, cfg, changelog_df=events, fail_at_epoch=3)
     lake = LakeTable(spark, cfg.lake_path)
     n_applied_before = len(lake.applied_keys())
     assert n_applied_before > 0
 
     # resume: must skip committed epochs, apply the rest, end in the same state
-    res = ingest(spark, cfg, changelog_df=events, mode="mor")
+    res = ingest(spark, cfg, changelog_df=events)
     assert res.epochs_skipped, "resume should skip already-committed epochs"
     actual = LakeTable(spark, cfg.lake_path).read()
     expected = expected_state(events, cfg)
     assert actual.exceptAll(expected).count() == 0
     assert expected.exceptAll(actual).count() == 0
     # re-running a completed ingest is a no-op (idempotent commit keys)
-    res2 = ingest(spark, cfg, changelog_df=events, mode="mor")
+    res2 = ingest(spark, cfg, changelog_df=events)
     assert not res2.epochs_applied
 
 
 def test_validate_detects_and_corrects_drift(spark, events, tmp_path):
     cfg = make_cfg(tmp_path)
-    ingest(spark, cfg, changelog_df=events, mode="mor")
+    ingest(spark, cfg, changelog_df=events)
     lake = LakeTable(spark, cfg.lake_path)
     # seed drift: tamper one row's text, delete another url entirely
     snapshot = lake.read()
@@ -141,7 +140,7 @@ def test_validate_detects_and_corrects_drift(spark, events, tmp_path):
 
 def test_schema_evolution_lang_null_before_epoch(spark, events, tmp_path):
     cfg = make_cfg(tmp_path)
-    ingest(spark, cfg, changelog_df=events, mode="mor")
+    ingest(spark, cfg, changelog_df=events)
     actual = LakeTable(spark, cfg.lake_path).read()
     assert "lang" in actual.columns
     # urls whose winning event predates evolution have lang null
@@ -164,7 +163,7 @@ def test_rerun_resplit_partial_epoch(spark, events, tmp_path):
     ).drop("partition", "batch_epoch")
     lake.append_mor(lww_dedup_skinny(first, "url", "warc_ts", "seq"), ["0:0"])
 
-    res = ingest(spark, cfg, changelog_df=events, mode="mor")
+    res = ingest(spark, cfg, changelog_df=events)
     assert 0 in res.epochs_applied
     # every partition:epoch key applied exactly once; final state correct
     actual = LakeTable(spark, cfg.lake_path).read()
@@ -184,7 +183,7 @@ def test_validate_sampled_coverage(spark, events, tmp_path):
     """coverage_percent < 100 validates a token-space sample of keys on
     BOTH sides (SplitPartitions.java:66-68, README.md:186)."""
     cfg = make_cfg(tmp_path)
-    ingest(spark, cfg, changelog_df=events, mode="mor")
+    ingest(spark, cfg, changelog_df=events)
     full_d, full_jc = validate(spark, cfg, changelog_df=events)
     cfg25 = make_cfg(tmp_path, coverage_percent=25)
     d, jc = validate(spark, cfg25, changelog_df=events)
@@ -210,7 +209,7 @@ def test_diff_reports_mismatching_column_names(spark):
 
 def test_lake_point_lookup_prunes_buckets(spark, events, tmp_path):
     cfg = make_cfg(tmp_path)
-    ingest(spark, cfg, changelog_df=events, mode="mor")
+    ingest(spark, cfg, changelog_df=events)
     lake = LakeTable(spark, cfg.lake_path)
     all_rows = {r["url"]: r["seq"] for r in lake.read().collect()}
     some = sorted(all_rows)[:3]
@@ -227,7 +226,7 @@ def test_token_range_restricted_ingest(spark, events, tmp_path):
 
     mid = TOKEN_SPACE // 2
     cfg = make_cfg(tmp_path, max_token=mid)
-    ingest(spark, cfg, changelog_df=events, mode="mor")
+    ingest(spark, cfg, changelog_df=events)
     got = LakeTable(spark, cfg.lake_path).read()
     full = expected_state(events, make_cfg(tmp_path / "unused"))
     expected = full.where(token_expr("url") <= mid)
@@ -255,9 +254,7 @@ def test_asof_join_matches_lake_built_up_to_timestamp(spark, events, tmp_path):
     )
     for i, cut in enumerate(cuts):
         cfg = make_cfg(tmp_path / f"t{i}")
-        ingest(spark, cfg,
-               changelog_df=events.where(F.col("warc_ts") <= F.lit(cut)),
-               mode="mor")
+        ingest(spark, cfg, changelog_df=events.where(F.col("warc_ts") <= F.lit(cut)))
         lake_rows = {
             r["url"]: (r["seq"], r["text"])
             for r in LakeTable(spark, cfg.lake_path).read()
@@ -301,7 +298,7 @@ def test_auto_lww_salts_skewed_epoch_only(spark, tmp_path):
     events = spark.createDataFrame(rows, WAL_SCHEMA)
 
     cfg = make_cfg(tmp_path, skew_min_rows=100, num_partitions=8)
-    res = ingest(spark, cfg, changelog_df=events, mode="mor", lww_strategy="auto")
+    res = ingest(spark, cfg, changelog_df=events, lww_strategy="auto")
     assert res.epochs_salted == [0]
     lake = LakeTable(spark, cfg.lake_path)
     actual = lake.read()
@@ -332,9 +329,7 @@ def test_time_travel_reads_and_vacuum(spark, events, tmp_path):
     snaps = {}
     lake = None
     for upto in (3, 6):
-        ingest(spark, cfg,
-               changelog_df=events.where(F.col("batch_epoch") < upto),
-               mode="mor")
+        ingest(spark, cfg, changelog_df=events.where(F.col("batch_epoch") < upto))
         lake = LakeTable(spark, cfg.lake_path)
         snaps[lake.manifest().version] = {
             tuple(r) for r in lake.read().collect()
@@ -365,8 +360,7 @@ def test_vacuum_survives_swap_crash_orphan(spark, events, tmp_path):
     import shutil
 
     cfg = make_cfg(tmp_path)
-    ingest(spark, cfg, changelog_df=events.where(F.col("batch_epoch") < 3),
-           mode="mor")
+    ingest(spark, cfg, changelog_df=events.where(F.col("batch_epoch") < 3))
     lake = LakeTable(spark, cfg.lake_path)
     cur_v = lake.manifest().version
     before = {tuple(r) for r in lake.read().collect()}

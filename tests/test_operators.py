@@ -67,16 +67,6 @@ def test_greatest_writetime(spark):
     assert out.first()["wt"] == 15
 
 
-def test_token_ranges_cover_space():
-    rs = partitions.split_token_ranges(10)
-    assert rs[0].min_token == 0
-    assert rs[-1].max_token == partitions.TOKEN_SPACE - 1
-    for prev, cur in zip(rs, rs[1:]):
-        assert cur.min_token == prev.max_token + 1
-    with pytest.raises(ValueError):
-        partitions.split_token_ranges(4, coverage_percent=0)
-
-
 def test_coverage_filter_reduces(spark):
     df = spark.range(0, 5000).select(F.col("id").cast("string").alias("k"))
     frac = df.where(partitions.coverage_filter("k", 20)).count() / 5000
@@ -91,6 +81,18 @@ def test_salted_and_skinny_lww_equal_plain(spark):
     b = lww.lww_dedup_salted(df, salt_buckets=4).orderBy("url").collect()
     c = lww.lww_dedup_skinny(df).orderBy("url").collect()
     assert a == b == c
+
+
+def test_lww_dedup_tie_col_breaks_exact_ties(spark):
+    """On an exact (ts, seq) tie max_by keeps the row it meets last, so
+    the tie winner comes first here: only tie_col can pick it."""
+    df = spark.createDataFrame(
+        [("k", 1, 1, "win", 1), ("k", 1, 1, "lose", 0)],
+        "url string, warc_ts long, seq long, p string, _prec int",
+    ).coalesce(1)
+    assert [tuple(r) for r in lww.lww_dedup(df, tie_col="_prec").collect()] == [
+        ("k", 1, 1, "win")
+    ]
 
 
 def test_guardrail_counters(spark):
@@ -805,6 +807,20 @@ def test_doc_chunks_boundary_math_and_mapside_plan(spark):
     # overlap: chunk k repeats the trailing 8 tokens of chunk k-1
     c0, c1 = sorted(got[56], key=lambda r: r.chunk_id)
     assert c0.chunk_text.split(" ")[24:] == c1.chunk_text.split(" ")[:8]
+
+
+def test_doc_chunks_rejects_stride_outside_window(spark):
+    """stride < 1 never advances; stride > chunk_tokens skips tokens and
+    starts trailing chunks past the end (negative n_chunk_tokens)."""
+    from cassandra_data_migrator_spark.operators.text import doc_chunks
+
+    df = spark.createDataFrame([(3, "a b c")], ["doc_id", "text"])
+    for stride in (0, -1, 5):
+        with pytest.raises(ValueError, match="stride"):
+            doc_chunks(df, "text", "doc_id", chunk_tokens=1, stride=stride)
+    # stride == chunk_tokens (no overlap) stays valid
+    out = doc_chunks(df, "text", "doc_id", chunk_tokens=1, stride=1).collect()
+    assert sorted(r.n_chunk_tokens for r in out) == [1, 1, 1]
 
 
 def test_train_split_deterministic_stratified_mapside(spark):

@@ -105,6 +105,94 @@ def test_lake_merge_idempotent_under_reapplication(spark, tmp_path_factory, evs)
     assert snap1 == snap2
 
 
+# ------------------------------------------------------- lake folds vs model
+# event i goes to batch assign[i]; empty batches are dropped
+assign_strategy = st.lists(st.integers(min_value=0, max_value=2), min_size=25, max_size=25)
+LAKE_SETTINGS = settings(
+    max_examples=6, deadline=None, suppress_health_check=[HealthCheck.too_slow]
+)
+LAKE_SCHEMA = "url string, warc_ts timestamp, seq long, payload string"
+
+
+def _event_rows(evs):
+    return [
+        (k, BASE + datetime.timedelta(seconds=off), i, p)
+        for i, (k, off, p) in enumerate(evs)
+    ]
+
+
+def _batches(rows, assign):
+    groups = [[r for r, a in zip(rows, assign) if a == b] for b in range(3)]
+    return [g for g in groups if g]
+
+
+def _snapshot(lake):
+    return {tuple(r) for r in lake.read().collect()}
+
+
+def _new_lake(spark, tmp_path_factory, schema):
+    from cassandra_data_migrator_spark.sources.lake import LakeTable
+
+    path = str(tmp_path_factory.mktemp("lake"))
+    return LakeTable.create(
+        spark, path, spark.createDataFrame([], schema).schema, key_col="url", num_buckets=4
+    )
+
+
+@given(events_strategy, assign_strategy)
+@LAKE_SETTINGS
+def test_lake_folds_agree_with_model(spark, tmp_path_factory, evs, assign):
+    """Every lake fold equals the Python LWW model over batches that
+    arrive in any order: MoR deltas resolved at read time, the same
+    after compaction, and a sequence of CoW merges."""
+    rows = _event_rows(evs)
+    batches = _batches(rows, assign)
+    expected = _reference_lww(rows)
+
+    mor = _new_lake(spark, tmp_path_factory, LAKE_SCHEMA)
+    cow = _new_lake(spark, tmp_path_factory, LAKE_SCHEMA)
+    for i, b in enumerate(batches):
+        df = spark.createDataFrame(b, LAKE_SCHEMA)
+        mor.append_mor(df, [f"b{i}"])
+        cow.merge_cow(df, [f"b{i}"])
+    assert _snapshot(mor) == expected
+    mor.compact()
+    assert _snapshot(mor) == expected
+    assert _snapshot(cow) == expected
+
+
+@given(events_strategy, st.sets(st.sampled_from(["k1", "k2", "k3"])))
+@LAKE_SETTINGS
+def test_lake_force_merge_batch_wins_exact_ties(spark, tmp_path_factory, evs, forced):
+    """merge_cow(force=True): a batch row with exactly the stored
+    winner's (ts, seq) replaces it; keys outside the batch keep theirs."""
+    rows = _event_rows(evs)
+    lake = _new_lake(spark, tmp_path_factory, LAKE_SCHEMA)
+    lake.merge_cow(spark.createDataFrame(rows, LAKE_SCHEMA), ["seed"])
+    winners = _reference_lww(rows)
+    ties = [(k, ts, seq, p + "!") for k, ts, seq, p in winners if k in forced]
+    lake.merge_cow(spark.createDataFrame(ties, LAKE_SCHEMA), ["fix"], force=True)
+    expected = {w for w in winners if w[0] not in forced} | set(ties)
+    assert _snapshot(lake) == expected
+
+
+@given(events_strategy, assign_strategy)
+@LAKE_SETTINGS
+def test_lake_counter_merge_agrees_with_model(spark, tmp_path_factory, evs, assign):
+    """merge_counter over batches: each key's counter is the sum of all
+    its deltas; the other columns come from its (ts, seq)-largest row."""
+    schema = LAKE_SCHEMA + ", cnt long"
+    rows = [(*r, i % 5 - 2) for i, r in enumerate(_event_rows(evs))]
+    lake = _new_lake(spark, tmp_path_factory, schema)
+    for i, b in enumerate(_batches(rows, assign)):
+        lake.merge_counter(spark.createDataFrame(b, schema), [f"b{i}"], ["cnt"])
+    sums: dict = {}
+    for r in rows:
+        sums[r[0]] = sums.get(r[0], 0) + r[4]
+    expected = {(*w, sums[w[0]]) for w in _reference_lww([r[:4] for r in rows])}
+    assert _snapshot(lake) == expected
+
+
 # ------------------------------------------------------- incremental dedup
 docs_strategy = st.lists(
     st.lists(st.sampled_from(["aa", "bb", "cc", "dd"]), min_size=0, max_size=8)

@@ -78,13 +78,13 @@ wd = tempfile.mkdtemp(prefix="cdm_scal_", dir="/dev/shm" if os.path.isdir("/dev/
 warm = EngineConfig.from_dict(dict(lake_path=wd + "/warm_lake",
                                    epoch_size=epoch_size,
                                    num_partitions=32, num_buckets=64))
-ingest(spark, warm, changelog_df=ev.where("batch_epoch < 2"), mode="mor")
+ingest(spark, warm, changelog_df=ev.where("batch_epoch < 2"))
 cfg = EngineConfig.from_dict(dict(lake_path=wd + "/lake",
                                   lineage_path=wd + "/lineage",
                                   epoch_size=epoch_size,
                                   num_partitions=32, num_buckets=64))
 t0 = time.time()
-ingest(spark, cfg, changelog_df=ev, mode="mor", compact_every=8)
+ingest(spark, cfg, changelog_df=ev, compact_every=8)
 dt = time.time() - t0
 rows = LakeTable(spark, cfg.lake_path).read().count()
 shutil.rmtree(wd, ignore_errors=True)
