@@ -63,9 +63,6 @@ class EngineConfig:
     lineage_path: str = ""
     changelog_path: str = ""
 
-    # --- schema evolution: columns that may appear mid-stream
-    evolvable_cols: tuple[str, ...] = ("lang",)
-
     extra: dict = field(default_factory=dict)
 
     @classmethod

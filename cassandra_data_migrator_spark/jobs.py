@@ -101,23 +101,27 @@ def ingest(
     ``fail_at_epoch`` injects a crash *after* that many epochs committed,
     for the kill-and-resume test.
     """
-    events = changelog_df if changelog_df is not None else spark.read.parquet(cfg.changelog_path)
-    lake = _ensure_lake(spark, cfg, events)
-    lin = LineageStore(spark, cfg.lineage_path) if cfg.lineage_path else None
-    if lin and cfg.track_run:
-        lin.start_run(cfg.run_id, "MIGRATE", cfg.prev_run_id)
-
-    applied = lake.applied_keys()
     # O(epochs) planning (SplitPartitions analog, job/SplitPartitions.java:
     # 32-76): the epoch list comes from the WAL's ``batch_epoch=`` hive
     # directories (metadata only — no event rows read) when this job owns
     # the read; a caller-supplied DataFrame may carry filters the file
     # listing can't see, so that path falls back to a single-column
     # distinct (O(epochs) driver rows, never epochs x partitions).
-    if changelog_df is None and cfg.changelog_path:
+    # The directories are listed BEFORE the scan builds its file index:
+    # an epoch that lands in between is then in the index but not in the
+    # plan (the next run picks it up), never planned without its files.
+    if changelog_df is None:
         epochs = _epochs_from_wal_dirs(cfg.changelog_path)
+        events = spark.read.parquet(cfg.changelog_path)
     else:
+        events = changelog_df
         epochs = sorted(r[0] for r in events.select("batch_epoch").distinct().collect())
+    lake = _ensure_lake(spark, cfg, events)
+    lin = LineageStore(spark, cfg.lineage_path) if cfg.lineage_path else None
+    if lin and cfg.track_run:
+        lin.start_run(cfg.run_id, "MIGRATE", cfg.prev_run_id)
+
+    applied = lake.applied_keys()
     # applied partitions per epoch, parsed from the manifest's commit keys
     applied_by_epoch: dict[int, set[int]] = {}
     for k in applied:

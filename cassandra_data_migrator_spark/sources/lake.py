@@ -33,6 +33,17 @@ engine needs, in the same shape Iceberg provides it:
     the affected buckets at once. Read-time resolve, compaction and the
     CoW merge all fold with ``operators.lww.lww_dedup``; the merges and
     compaction commit through one bucket-rewrite path.
+  * **table-wide deltas, by design** — only the base is bucketed. Delta
+    files are written as the fold left them (AQE-sized, unbucketed) into
+    one table-wide list (the ``GLOBAL_DELTA`` slot), so any delta may
+    hold any key: a read of some buckets reads every delta, and folding
+    the deltas (``compact``, or ``merge_cow`` over pending deltas)
+    rewrites every base bucket in one commit. Bucket-aligned deltas
+    (one ``repartition(num_buckets)`` delta write) were measured and
+    lost at benchmark scale: a wide-keys ingest fell from 2,287 to
+    1,248 events/s and hot-key write amplification rose from 3.20 to
+    6.88, since ``num_buckets`` tiny files per epoch cost more than the
+    rows they hold.
 
 Rows are stored with their CDC system columns (``op``, ``warc_ts``,
 ``seq``); deletes persist as tombstones so a late-arriving older event
@@ -95,7 +106,7 @@ class Manifest:
     seq_col: str
     op_col: str
     base: dict[str, list[str]] = field(default_factory=dict)    # bucket -> base files
-    deltas: dict[str, list[str]] = field(default_factory=dict)  # bucket -> MoR delta files
+    deltas: dict[str, list[str]] = field(default_factory=dict)  # GLOBAL_DELTA -> MoR delta files
     applied: list[str] = field(default_factory=list)            # idempotent commit keys
     props: dict = field(default_factory=dict)
     # file -> {"rows", "min_ts", "max_ts"} footer stats (Iceberg manifest
@@ -117,8 +128,6 @@ class Manifest:
 class CommitResult:
     committed: bool
     version: int
-    skipped_keys: list[str] = field(default_factory=list)
-    rows_written: int = 0
     buckets_rewritten: int = 0
 
 
@@ -250,20 +259,13 @@ class LakeTable:
         return t
 
     # ------------------------------------------------------------- helpers
-    def _files(self, mf: Manifest, buckets: list[int] | None, which: str) -> list[str]:
-        store: dict[str, list[str]] = getattr(mf, which)
-        if buckets is None:
-            keys = list(store)
-        else:
-            keys = [str(b) for b in buckets]
-            # global (unbucketed) delta files may hold any key — always in
-            # scope when reading a bucket subset
-            if which == "deltas" and GLOBAL_DELTA in store:
-                keys.append(GLOBAL_DELTA)
-        out: list[str] = []
-        for k in keys:
-            out.extend(os.path.join(self.path, p) for p in store.get(k, []))
-        return out
+    def _files(self, mf: Manifest, buckets: list[int] | None = None) -> list[str]:
+        """Base files of ``buckets`` (all when None), then every delta
+        file: deltas are table-wide, so any of them may hold any key."""
+        keys = list(mf.base) if buckets is None else [str(b) for b in buckets]
+        rels = [p for k in keys for p in mf.base.get(k, [])]
+        rels += [p for fs in mf.deltas.values() for p in fs]
+        return [os.path.join(self.path, p) for p in rels]
 
     def _collect_stats(
         self, files_by_bucket: dict[str, list[str]], mf: Manifest
@@ -336,46 +338,6 @@ class LakeTable:
         # explicit schema => old files yield null for columns added later
         return self.spark.read.schema(schema).parquet(*files)
 
-    def _write_data(
-        self, df: DataFrame, mf: Manifest, bucketed: bool = True
-    ) -> dict[str, list[str]]:
-        """Write df under data/c-<uuid>/; return bucket->relative files.
-
-        ``bucketed=True``: one shuffle partition per bucket => one data
-        file per (bucket, commit). ``bucketed=False``: write as-is (AQE
-        has already sized the partitions) under the GLOBAL_DELTA slot —
-        the cheap path for small MoR delta batches, which would
-        otherwise pay a num_buckets-way shuffle + num_buckets tiny files
-        per commit.
-        """
-        commit_dir = f"data/c-{uuid.uuid4().hex}"
-        out = os.path.join(self.path, commit_dir)
-        if not bucketed:
-            df.write.parquet(out)
-            files = [
-                os.path.join(commit_dir, fn)
-                for fn in os.listdir(out)
-                if fn.endswith(".parquet")
-            ]
-            return {GLOBAL_DELTA: files}
-        (
-            df.withColumn(BUCKET_COL, bucket_expr(mf.key_col, mf.num_buckets))
-            .repartition(mf.num_buckets, BUCKET_COL)
-            .write.partitionBy(BUCKET_COL)
-            .parquet(out)
-        )
-        by_bucket: dict[str, list[str]] = {}
-        for bdir in os.listdir(out):
-            if not bdir.startswith(f"{BUCKET_COL}="):
-                continue
-            b = bdir.split("=", 1)[1]
-            for fn in os.listdir(os.path.join(out, bdir)):
-                if fn.endswith(".parquet"):
-                    by_bucket.setdefault(b, []).append(
-                        os.path.join(commit_dir, bdir, fn)
-                    )
-        return by_bucket
-
     def _evolve_schema(self, mf: Manifest, batch_schema: T.StructType) -> Manifest:
         """Additively widen the table schema with new batch columns."""
         cur = mf.schema()
@@ -415,21 +377,36 @@ class LakeTable:
     ) -> CommitResult:
         """Shared commit tail of ``merge_cow``, ``merge_counter`` and
         ``compact``: write ``resolved`` (the folded rows of ``buckets``)
-        bucketed, point every rewritten bucket at its new base files and
-        drop its deltas, record the commit keys, and publish.
+        with one shuffle partition per bucket (one data file per bucket
+        and commit), point every rewritten bucket at its new base files,
+        drop the deltas, record the commit keys, and publish.
 
-        Unbucketed (GLOBAL_DELTA) deltas are dropped too: ``compact``
-        folds them into ``resolved``, and the merges only run once there
-        are none."""
+        Dropping every delta is safe: ``compact`` and ``merge_cow`` fold
+        all pending deltas into ``resolved``, and ``merge_counter`` only
+        runs when there are none."""
         parent = mf.version
-        new_files = self._write_data(resolved, mf)
+        commit_dir = f"data/c-{uuid.uuid4().hex}"
+        out = os.path.join(self.path, commit_dir)
+        (
+            resolved.withColumn(BUCKET_COL, bucket_expr(mf.key_col, mf.num_buckets))
+            .repartition(mf.num_buckets, BUCKET_COL)
+            .write.partitionBy(BUCKET_COL)
+            .parquet(out)
+        )
+        new_files: dict[str, list[str]] = {}
+        for bdir in os.listdir(out):
+            if bdir.startswith(f"{BUCKET_COL}="):
+                new_files[bdir.split("=", 1)[1]] = [
+                    os.path.join(commit_dir, bdir, fn)
+                    for fn in os.listdir(os.path.join(out, bdir))
+                    if fn.endswith(".parquet")
+                ]
         mf.stats.update(self._collect_stats(new_files, mf))
         mf.version = parent + 1
         rewritten = sorted(set(buckets) | {int(b) for b in new_files})
         for b in rewritten:
             mf.base[str(b)] = new_files.get(str(b), [])
-            mf.deltas.pop(str(b), None)
-        mf.deltas.pop(GLOBAL_DELTA, None)
+        mf.deltas = {}
         mf.applied.extend(k for k in keys if k not in mf.applied)
         self._swap(mf, expected_parent=parent)
         return CommitResult(True, mf.version, buckets_rewritten=len(rewritten))
@@ -447,20 +424,18 @@ class LakeTable:
         ``partition:batch_epoch`` slice); if all are already applied the
         call is a no-op. Callers re-driving a partially-applied epoch
         must pre-filter the batch to the unapplied keys.
+
+        Pending MoR deltas are folded in the same commit: they may hold
+        any key, so the rewrite widens to every base bucket.
         """
         keys = [commit_keys] if isinstance(commit_keys, str) else list(commit_keys)
         mf = self.manifest()
         if all(k in mf.applied for k in keys):
-            return CommitResult(False, mf.version, skipped_keys=keys)
-        if mf.deltas.get(GLOBAL_DELTA):
-            # global delta files may hold keys outside the affected
-            # buckets; fold them into the base before a bucket-scoped CoW
-            self.compact()
-            mf = self.manifest()
+            return CommitResult(False, mf.version)
         mf, batch, affected = self._prepare_merge(mf, batch)
-        existing = self._read_files(
-            mf, self._files(mf, affected, "base") + self._files(mf, affected, "deltas")
-        )
+        if any(mf.deltas.values()):
+            affected = sorted(set(affected) | {int(b) for b in mf.base})
+        existing = self._read_files(mf, self._files(mf, affected))
         tie = None
         if force:
             # batch wins exact (ts, seq) ties — autocorrect overwrite
@@ -500,19 +475,19 @@ class LakeTable:
         mf = self.manifest()
         overlap = [k for k in keys if k in mf.applied]
         if len(overlap) == len(keys):
-            return CommitResult(False, mf.version, skipped_keys=keys)
+            return CommitResult(False, mf.version)
         if overlap:
             raise ValueError(
                 f"merge_counter: commit keys partially applied ({overlap}); "
                 "re-summing applied counter deltas would double-count — "
                 "re-drive with the batch filtered to unapplied keys only"
             )
-        mf, batch, affected = self._prepare_merge(mf, batch)
-        if mf.deltas.get(GLOBAL_DELTA) or any(mf.deltas.get(str(b)) for b in affected):
+        if any(mf.deltas.values()):
             # counter tables are CoW-only: MoR delta files hold unresolved
             # row versions whose counter values would double-sum
-            raise ValueError("merge_counter cannot run on buckets with MoR deltas")
-        existing = self._read_files(mf, self._files(mf, affected, "base"))
+            raise ValueError("merge_counter cannot run while MoR deltas are pending")
+        mf, batch, affected = self._prepare_merge(mf, batch)
+        existing = self._read_files(mf, self._files(mf, affected))
         both = existing.unionByName(batch, allowMissingColumns=True)
         other_cols = [c for c in both.columns if c not in counter_cols and c != mf.key_col]
         payload = F.struct(*[F.col(c) for c in other_cols])
@@ -533,15 +508,24 @@ class LakeTable:
         several driver threads (the epoch-pipelining path in
         ``jobs.ingest``). Files land under a unique commit dir and stay
         invisible until :meth:`commit_staged_delta` links them into a
-        manifest; a crash before that leaves harmless orphans."""
+        manifest; a crash before that leaves harmless orphans.
+
+        Deltas are table-wide by design (a bucket-aligned write was
+        measured and lost; see the module docstring): the batch is
+        written as the fold left it, AQE-sized and unbucketed, into the
+        one GLOBAL_DELTA slot."""
         mf = self.manifest()
         # widen a LOCAL manifest copy so a batch carrying new columns is
         # written with them; the authoritative schema evolution happens
         # at commit time (ordered), and readers ignore file columns the
         # committed schema doesn't (yet) name
         mf = self._evolve_schema(mf, batch.schema)
-        aligned = self._align(batch, mf.schema())
-        files = self._write_data(aligned, mf, bucketed=False)
+        commit_dir = f"data/c-{uuid.uuid4().hex}"
+        out = os.path.join(self.path, commit_dir)
+        self._align(batch, mf.schema()).write.parquet(out)
+        files = {GLOBAL_DELTA: [
+            os.path.join(commit_dir, fn) for fn in os.listdir(out) if fn.endswith(".parquet")
+        ]}
         return {
             "files": files,
             "schema_json": json.dumps(batch.schema.jsonValue()),
@@ -556,12 +540,11 @@ class LakeTable:
         keys = [commit_keys] if isinstance(commit_keys, str) else list(commit_keys)
         mf = self.manifest()
         if all(k in mf.applied for k in keys):
-            return CommitResult(False, mf.version, skipped_keys=keys)
+            return CommitResult(False, mf.version)
         parent = mf.version
         mf = self._evolve_schema(mf, T.StructType.fromJson(json.loads(staged["schema_json"])))
         mf.version = parent + 1
-        for b, files in staged["files"].items():
-            mf.deltas.setdefault(b, []).extend(files)
+        mf.deltas.setdefault(GLOBAL_DELTA, []).extend(staged["files"][GLOBAL_DELTA])
         mf.stats.update(staged.get("stats", {}))
         mf.applied.extend(k for k in keys if k not in mf.applied)
         self._swap(mf, expected_parent=parent)
@@ -577,13 +560,13 @@ class LakeTable:
         keys = [commit_keys] if isinstance(commit_keys, str) else list(commit_keys)
         mf = self.manifest()
         if all(k in mf.applied for k in keys):
-            return CommitResult(False, mf.version, skipped_keys=keys)
+            return CommitResult(False, mf.version)
         return self.commit_staged_delta(self.stage_delta(batch), keys)
 
-    def compact(
-        self, buckets: list[int] | None = None, expire_as_of=None
-    ) -> CommitResult:
-        """Fold MoR deltas into the base for the given (or all) buckets.
+    def compact(self, expire_as_of=None) -> CommitResult:
+        """Fold the pending MoR deltas into the base. Deltas are
+        table-wide, so this rewrites every base bucket; without pending
+        deltas it is a no-op.
 
         ``expire_as_of``: additionally drop rows whose TTL has lapsed by
         that timestamp — the physical reclaim of USING-TTL rows
@@ -591,22 +574,10 @@ class LakeTable:
         later-arriving OLDER version of an expired row can resurrect the
         key until the next expiring compaction."""
         mf = self.manifest()
-        has_global = bool(mf.deltas.get(GLOBAL_DELTA))
-        with_deltas = sorted(
-            int(b) for b in mf.deltas if b != GLOBAL_DELTA and mf.deltas[b]
-        )
-        if buckets is not None and not has_global:
-            with_deltas = [b for b in with_deltas if b in buckets]
-        if has_global:
-            # global deltas may hold any key: fold over every bucket that
-            # has base data too
-            with_deltas = sorted(set(with_deltas) | {int(b) for b in mf.base})
-        if not with_deltas and not has_global:
+        if not any(mf.deltas.values()):
             return CommitResult(False, mf.version)
-        df = self._read_files(
-            mf,
-            self._files(mf, with_deltas, "base") + self._files(mf, with_deltas, "deltas"),
-        )
+        buckets = sorted(int(b) for b in mf.base)
+        df = self._read_files(mf, self._files(mf, buckets))
         resolved = lww_dedup(df, mf.key_col, mf.ts_col, mf.seq_col)
         ttl_col = mf.props.get("ttl_col")
         if expire_as_of is not None and ttl_col and ttl_col in resolved.columns:
@@ -615,7 +586,7 @@ class LakeTable:
             resolved = resolved.where(
                 ttl_alive_predicate(mf.ts_col, ttl_col, expire_as_of)
             )
-        return self._rewrite_buckets(mf, resolved, with_deltas, [])
+        return self._rewrite_buckets(mf, resolved, buckets, [])
 
     def vacuum(self, retain_last: int = 1) -> int:
         """Physically delete data files referenced only by manifests
@@ -679,7 +650,6 @@ class LakeTable:
     def read(
         self,
         include_tombstones: bool = False,
-        resolve: bool = True,
         buckets: list[int] | None = None,
         as_of=None,
         version: int | None = None,
@@ -692,20 +662,18 @@ class LakeTable:
         / Iceberg snapshot-read analog, no reference counterpart).
         Tombstones ('D' rows) dropped at projection.
 
+        ``buckets``: read only those buckets' base files. Every delta is
+        still read, so rows of other buckets' keys may come back too;
+        :meth:`lookup` filters to its keys.
+
         ``as_of``: when the table has a TTL column, rows whose TTL
         lapsed by that timestamp are filtered out at read time (the
         query-time half of USING-TTL expiry; ``compact(expire_as_of=)``
         is the physical reclaim)."""
         mf = self.manifest(version)
-        base = self._read_files(mf, self._files(mf, buckets, "base"))
-        has_deltas = any(mf.deltas.values())
-        if has_deltas:
-            deltas = self._read_files(mf, self._files(mf, buckets, "deltas"))
-            df = base.unionByName(deltas, allowMissingColumns=True)
-            if resolve:
-                df = lww_dedup(df, mf.key_col, mf.ts_col, mf.seq_col)
-        else:
-            df = base
+        df = self._read_files(mf, self._files(mf, buckets))
+        if any(mf.deltas.values()):
+            df = lww_dedup(df, mf.key_col, mf.ts_col, mf.seq_col)
         if not include_tombstones and mf.op_col in df.columns:
             # null op (e.g. correction rows) is live, not a tombstone
             df = df.where(~F.col(mf.op_col).eqNullSafe(F.lit("D")))
@@ -720,7 +688,6 @@ class LakeTable:
         self,
         ts_lower=None,
         ts_upper=None,
-        buckets: list[int] | None = None,
         include_tombstones: bool = True,
         version: int | None = None,
     ) -> DataFrame:
@@ -738,8 +705,7 @@ class LakeTable:
         consumer wants every committed version in the window anyway.
         Tombstones are included by default (a delete IS a change)."""
         mf = self.manifest(version)
-        files = self._files(mf, buckets, "base") + self._files(mf, buckets, "deltas")
-        kept, _ = self._prune_by_ts(mf, files, ts_lower, ts_upper)
+        kept, _ = self._prune_by_ts(mf, self._files(mf), ts_lower, ts_upper)
         df = self._read_files(mf, kept)
         if ts_lower is not None:
             df = df.where(F.col(mf.ts_col) >= F.lit(ts_lower))

@@ -179,6 +179,35 @@ def test_rerun_resplit_partial_epoch(spark, events, tmp_path):
     assert e0.select("ts_unix").distinct().count() == 3
 
 
+def test_epoch_landing_during_planning_is_ingested(spark, events, tmp_path, monkeypatch):
+    """An epoch dir that lands in the WAL while ingest plans is either
+    planned with its files or left for the next run, never committed
+    empty: two ingests of the WAL leave validate green."""
+    import os
+
+    from cassandra_data_migrator_spark import jobs
+
+    walp, pending = tmp_path / "wal", tmp_path / "pending"
+    wal.write_changelog(events, str(walp))
+    late = sorted(walp.glob("batch_epoch=*"), key=lambda p: int(p.name.split("=")[1]))[-1]
+    pending.mkdir()
+    os.rename(late, pending / late.name)
+    list_epochs = jobs._epochs_from_wal_dirs
+
+    def land_then_list(path):
+        if (pending / late.name).exists():
+            os.rename(pending / late.name, late)
+        return list_epochs(path)
+
+    monkeypatch.setattr(jobs, "_epochs_from_wal_dirs", land_then_list)
+    cfg = make_cfg(tmp_path, changelog_path=str(walp))
+    ingest(spark, cfg)
+    ingest(spark, cfg)
+    _, jc = validate(spark, cfg)
+    assert jc.get("MISSING") == 0
+    assert jc.get("MISMATCH") == 0
+
+
 def test_validate_sampled_coverage(spark, events, tmp_path):
     """coverage_percent < 100 validates a token-space sample of keys on
     BOTH sides (SplitPartitions.java:66-68, README.md:186)."""

@@ -63,7 +63,7 @@ def test_scan_changes_skips_files_and_matches_full_scan(spark, tmp_path):
                              for i in range(5)])
         lake.append_mor(batch, [f"e{epoch}"])
     mf = lake.manifest()
-    files = lake._files(mf, None, "base") + lake._files(mf, None, "deltas")
+    files = lake._files(mf)
     kept, skipped = lake._prune_by_ts(mf, files, 200, None)
     assert skipped >= 1 and len(kept) < len(files)
     got = sorted(r["key"] for r in lake.scan_changes(ts_lower=200).collect())
@@ -109,7 +109,7 @@ def test_stats_backward_compat_with_statless_manifest(spark, tmp_path):
         f.write(json.dumps(d))
     # pruning keeps everything; the bound is honestly unknown; reads work
     mf2 = lake.manifest()
-    files = lake._files(mf2, None, "base")
+    files = lake._files(mf2)
     kept, skipped = lake._prune_by_ts(mf2, files, 10_000, None)
     assert kept == files and skipped == 0
     assert lake.row_count_bound() is None

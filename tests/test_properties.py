@@ -144,21 +144,33 @@ def _new_lake(spark, tmp_path_factory, schema):
 def test_lake_folds_agree_with_model(spark, tmp_path_factory, evs, assign):
     """Every lake fold equals the Python LWW model over batches that
     arrive in any order: MoR deltas resolved at read time, the same
-    after compaction, and a sequence of CoW merges."""
+    after compaction, a sequence of CoW merges, and MoR appends
+    alternating with CoW merges. A CoW merge over pending deltas folds
+    them in its own commit: one new version, no deltas left."""
     rows = _event_rows(evs)
     batches = _batches(rows, assign)
     expected = _reference_lww(rows)
 
     mor = _new_lake(spark, tmp_path_factory, LAKE_SCHEMA)
     cow = _new_lake(spark, tmp_path_factory, LAKE_SCHEMA)
+    mixed = _new_lake(spark, tmp_path_factory, LAKE_SCHEMA)
     for i, b in enumerate(batches):
         df = spark.createDataFrame(b, LAKE_SCHEMA)
         mor.append_mor(df, [f"b{i}"])
         cow.merge_cow(df, [f"b{i}"])
+        if i % 2 == 0:
+            mixed.append_mor(df, [f"b{i}"])
+        else:
+            parent = mixed.manifest().version
+            mixed.merge_cow(df, [f"b{i}"])
+            mf = mixed.manifest()
+            assert mf.version == parent + 1
+            assert not any(mf.deltas.values())
     assert _snapshot(mor) == expected
     mor.compact()
     assert _snapshot(mor) == expected
     assert _snapshot(cow) == expected
+    assert _snapshot(mixed) == expected
 
 
 @given(events_strategy, st.sets(st.sampled_from(["k1", "k2", "k3"])))
