@@ -26,8 +26,6 @@ class EngineConfig:
 
     # --- batching (micro-batch epochs; CopyJobSession.java:150-218 analog)
     epoch_size: int = 100_000         # events per batch_epoch
-    rerun_multiplier: int = 4         # resumed epochs re-drive pending partitions in this
-                                      # many finer commit groups (TrackRun.java:48-71)
 
     # --- LWW semantics (WritetimeTTL.java:235-258, PKFactory.java:106-133)
     key_col: str = "url"
@@ -137,7 +135,6 @@ PROPERTY_MAP: dict[str, str] = {
     "spark.cdm.trackRun": "track_run",
     "spark.cdm.trackRun.runId": "run_id",
     "spark.cdm.trackRun.previousRunId": "prev_run_id",
-    "spark.cdm.trackRun.rerunMultiplier": "rerun_multiplier",
     "spark.cdm.autocorrect.missing": "autocorrect_missing",
     "spark.cdm.autocorrect.mismatch": "autocorrect_mismatch",
     "spark.cdm.schema.origin.column.ttl.names": "ttl_col",

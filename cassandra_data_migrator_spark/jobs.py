@@ -41,7 +41,6 @@ class RunResult:
     epochs_applied: list[int] = field(default_factory=list)
     epochs_skipped: list[int] = field(default_factory=list)
     epochs_salted: list[int] = field(default_factory=list)  # auto LWW skew decisions
-    lake_version: int = 0
 
 
 # --------------------------------------------------------------------- filters
@@ -75,6 +74,18 @@ def apply_origin_filters(df: DataFrame, cfg: EngineConfig) -> DataFrame:
     return df
 
 
+def origin_rows(events: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """The change rows a run applies: the origin filters, then the
+    guardrail skip (oversize rows are SKIPPED, not written). Batch
+    ingest, stream ingest and the verify fold all read through this."""
+    rows = apply_origin_filters(events, cfg)
+    if cfg.guardrail_col_size_kb:
+        rows = guardrail_flags(rows, cfg.guardrail_col_size_kb).where(
+            F.size("_large_cols") == 0
+        ).drop("_large_cols")
+    return rows
+
+
 # --------------------------------------------------------------------- ingest
 def ingest(
     spark: SparkSession,
@@ -86,21 +97,22 @@ def ingest(
 ) -> RunResult:
     """Replay the WAL epoch-by-epoch into the lake table (Migrate analog).
 
-    Each epoch's winners land as a merge-on-read delta; every
-    ``compact_every`` epochs, and once at the end, ``compact()`` folds
-    the deltas into the base.
+    Each planned epoch's winners land as one merge-on-read delta in one
+    commit; every ``compact_every`` epochs, and once at the end,
+    ``compact()`` folds the deltas into the base.
 
     ``lww_strategy``: 'skinny' (default — winner-seq agg + AQE-broadcast
     semi join; never sorts/shuffles payload bytes, 5x faster at 10^7-row
-    epochs), 'salted' (two-phase fold for degenerate single-key skew),
-    or 'auto' (per epoch, a cheap key-count aggregation — column-pruned
-    scan, map-side combine, O(distinct keys) shuffle — picks 'salted'
-    when one key exceeds max(cfg.skew_min_rows, rows/num_partitions),
-    else 'skinny';
-    decisions land in ``RunResult.epochs_salted``).
+    epochs) or 'auto' (per epoch, a cheap key-count aggregation —
+    column-pruned scan, map-side combine, O(distinct keys) shuffle —
+    folds with ``lww_dedup_salted`` when one key exceeds
+    max(cfg.skew_min_rows, rows/num_partitions), else skinny; decisions
+    land in ``RunResult.epochs_salted``).
     ``fail_at_epoch`` injects a crash *after* that many epochs committed,
     for the kill-and-resume test.
     """
+    if lww_strategy not in ("skinny", "auto"):
+        raise ValueError(f"lww_strategy must be 'skinny' or 'auto', not {lww_strategy!r}")
     # O(epochs) planning (SplitPartitions analog, job/SplitPartitions.java:
     # 32-76): the epoch list comes from the WAL's ``batch_epoch=`` hive
     # directories (metadata only — no event rows read) when this job owns
@@ -121,189 +133,128 @@ def ingest(
     if lin and cfg.track_run:
         lin.start_run(cfg.run_id, "MIGRATE", cfg.prev_run_id)
 
-    applied = lake.applied_keys()
     # applied partitions per epoch, parsed from the manifest's commit keys
     applied_by_epoch: dict[int, set[int]] = {}
-    for k in applied:
+    for k in lake.applied_keys():
         p, _, e = k.partition(":")
         if p.isdigit() and e.isdigit():
             applied_by_epoch.setdefault(int(e), set()).add(int(p))
     total = JobCounter()
     result = RunResult(counters=total)
-    done = 0
-    strategies = {
-        "skinny": lambda df: lww_dedup_skinny(df, cfg.key_col, cfg.ts_col, cfg.seq_col),
-        "salted": lambda df: lww_dedup_salted(
-            df, cfg.key_col, cfg.ts_col, cfg.seq_col, cfg.salt_buckets
-        ),
-    }
 
-    auto_picks: dict[int, str] = {}
+    # one (epoch, pending partitions, batch) per epoch to apply. A fresh
+    # epoch commits whole, keyed over the CONFIGURED partition universe
+    # (no data read, no partition filter); a partially applied epoch (a
+    # resumed crash, the rerun-pending-ranges case of TrackRun.java:
+    # 48-71) pays one lazy partition distinct, which the batch_epoch=
+    # directory pruning limits to that epoch, and applies the rest in
+    # one commit; a fully applied epoch is skipped with zero reads
+    # (assumes partition values < num_partitions, which the changelog
+    # writer guarantees).
+    universe = set(range(cfg.num_partitions))
+    plan: list[tuple[int, list[int], DataFrame]] = []
+    for epoch in epochs:
+        batch = events.where(F.col("batch_epoch") == F.lit(epoch))
+        applied_parts = applied_by_epoch.get(epoch, set())
+        if not applied_parts:
+            plan.append((epoch, sorted(universe), batch))
+            continue
+        pending = [] if applied_parts >= universe else sorted(
+            {r[0] for r in batch.select("partition").distinct().collect()} - applied_parts
+        )
+        if pending:
+            plan.append((epoch, pending, batch.where(F.col("partition").isin(pending))))
+        else:
+            result.epochs_skipped.append(epoch)
 
-    def pick_strategy(filtered: DataFrame, epoch: int):
-        """'auto': detect degenerate per-epoch skew with one cheap job —
-        per-key counts (map-side combined; only distinct keys shuffle)
-        over the key column alone (pruned scan). A key is hot when it
-        exceeds both an absolute floor and the per-partition average;
-        then the two-phase salted fold bounds reducer fan-in.
-
-        The decision is cached per epoch: a partially-applied epoch
-        resumed with rerun_multiplier>1 calls prepare_slice once per
-        slice group, and the probe's eager aggregation must not re-run
-        (nor epochs_salted record the same epoch twice)."""
-        if lww_strategy != "auto":
-            return strategies[lww_strategy]
-        if epoch not in auto_picks:
-            stats = (
-                filtered.groupBy(cfg.key_col)
-                .agg(F.count(F.lit(1)).alias("_c"))
-                .agg(F.max("_c").alias("mx"), F.sum("_c").alias("tot"))
-                .first()
-            )
-            mx, tot = stats["mx"] or 0, stats["tot"] or 0
-            if mx > max(cfg.skew_min_rows, tot / cfg.num_partitions):
-                result.epochs_salted.append(epoch)
-                auto_picks[epoch] = "salted"
-            else:
-                auto_picks[epoch] = "skinny"
-        return strategies[auto_picks[epoch]]
-
-    def prepare_slice(batch: DataFrame, parts_slice: list[int], epoch: int):
-        """Build the filtered+deduped plan for one commit slice; returns
-        (DataFrame, observations)."""
-        obs_read = Observation()
-        batch = batch.observe(obs_read, F.count(F.lit(1)).alias("read"))
-        filtered = apply_origin_filters(batch, cfg)
-        if cfg.guardrail_col_size_kb:
-            # oversize rows are SKIPPED, not written (guardrail-as-filter)
-            filtered = guardrail_flags(filtered, cfg.guardrail_col_size_kb).where(
-                F.size("_large_cols") == 0
-            ).drop("_large_cols")
-        dedup_fn = pick_strategy(filtered, epoch)
-        obs_write = Observation()
-        filtered = filtered.observe(obs_write, F.count(F.lit(1)).alias("passed"))
-        deduped = dedup_fn(filtered.drop("partition", "batch_epoch"))
+    def stage(epoch: int, batch: DataFrame):
+        """Filter, fold and write one epoch's delta (no commit)."""
+        obs_read, obs_pass = Observation(), Observation()
+        rows = origin_rows(batch.observe(obs_read, F.count(F.lit(1)).alias("read")), cfg)
+        salted = lww_strategy == "auto" and _has_hot_key(rows, cfg)
+        rows = rows.observe(obs_pass, F.count(F.lit(1)).alias("passed"))
+        rows = rows.drop("partition", "batch_epoch")
+        if salted:
+            winners = lww_dedup_salted(rows, cfg.key_col, cfg.ts_col, cfg.seq_col, cfg.salt_buckets)
+        else:
+            winners = lww_dedup_skinny(rows, cfg.key_col, cfg.ts_col, cfg.seq_col)
         # config-driven feature steps on the winners (Featureset analog;
         # same pipeline re-applied by expected_state for verification)
-        deduped = apply_features(deduped, cfg)
-        return deduped, obs_read, obs_write
+        return lake.stage_delta(apply_features(winners, cfg)), obs_read, obs_pass, salted
 
-    def finish_slice(parts_slice, epoch, obs_read, obs_write, commit_fn):
-        """Publish one slice (ordered) and book its counters/lineage."""
+    def commit(epoch: int, parts: list[int], staged_future) -> bool:
+        """Publish one staged epoch, book its counters and lineage;
+        returns whether a compaction is due."""
+        staged, obs_read, obs_pass, salted = staged_future.result()
         try:
-            commit_fn()
+            lake.commit_staged_delta(staged, [f"{p}:{epoch}" for p in parts])
+            read_n, passed_n = obs_read.get["read"], obs_pass.get["passed"]
             jc = JobCounter()
-            read_n = obs_read.get["read"]
-            passed_n = obs_write.get["passed"]
             jc.add("READ", read_n)
             jc.add("WRITE", passed_n)
             jc.add("SKIPPED", read_n - passed_n)
             total.merge(jc)
             if lin and cfg.track_run:
-                lin.record_batch(cfg.run_id, parts_slice, epoch, "PASS", jc.as_dict(),
+                lin.record_batch(cfg.run_id, parts, epoch, "PASS", jc.as_dict(),
                                  prev_run_id=cfg.prev_run_id)
         except Exception:
             if lin and cfg.track_run:
-                lin.record_batch(cfg.run_id, parts_slice, epoch, "FAIL",
-                                 prev_run_id=cfg.prev_run_id)
+                lin.record_batch(cfg.run_id, parts, epoch, "FAIL", prev_run_id=cfg.prev_run_id)
             raise
-
-    # flatten the epoch plan into commit slices (a resumed epoch
-    # re-drives its pending partitions in finer groups — the
-    # rerunMultiplier analog, TrackRun.java:48-71). Fresh epochs commit
-    # whole with keys over the CONFIGURED partition universe (no data
-    # read, no partition filter — every row of the epoch is applied);
-    # only a PARTIALLY applied epoch pays a lazy per-epoch distinct,
-    # which the batch_epoch= directory pruning limits to that epoch.
-    slices: list[tuple[int, list[int], bool, DataFrame]] = []
-    for epoch in epochs:
-        batch = events.where(F.col("batch_epoch") == F.lit(epoch))
-        applied_parts = applied_by_epoch.get(epoch, set())
-        if not applied_parts:
-            slices.append((epoch, list(range(cfg.num_partitions)), True, batch))
-            continue
-        if applied_parts >= set(range(cfg.num_partitions)):
-            # whole configured universe committed -> skip with zero reads
-            # (a no-op rerun at the 10^10 regime must not rescan the WAL;
-            # assumes partition values < num_partitions, which the
-            # changelog writer guarantees)
-            result.epochs_skipped.append(epoch)
-            continue
-        # partially applied epoch: true partition list (union with applied
-        # keys so a universe written by a differently-configured run still
-        # counts)
-        parts = sorted(
-            {r[0] for r in batch.select("partition").distinct().collect()}
-            | applied_parts
-        )
-        pending = [p for p in parts if p not in applied_parts]
-        if not pending:
-            result.epochs_skipped.append(epoch)
-            continue
-        g = max(1, min(cfg.rerun_multiplier, len(pending)))
-        for i in range(g):
-            grp = pending[i::g]
-            slices.append(
-                (epoch, grp, i == g - 1, batch.where(F.col("partition").isin(grp)))
-            )
-
-    need_compact = False
-
-    def after_epoch_committed(epoch: int) -> None:
-        nonlocal done, need_compact
+        if salted:
+            result.epochs_salted.append(epoch)
         result.epochs_applied.append(epoch)
-        done += 1
-        if compact_every and done % compact_every == 0:
-            need_compact = True
+        done = len(result.epochs_applied)
         if fail_at_epoch is not None and done >= fail_at_epoch:
             raise RuntimeError(f"injected failure after {done} epochs")
+        return bool(compact_every) and done % compact_every == 0
 
     # two-deep epoch pipeline: epoch k+1's scan+filter+LWW (the
     # Spark-heavy part) STAGES on a worker thread while epoch k's
     # manifest commit + lineage run — the serial epoch loop was the
     # measured residual in the N->4N scaling evidence.
     # Commits stay strictly ordered, so resume/exactly-once semantics
-    # are unchanged; a staged-but-uncommitted slice is an orphan dir.
-    def stage(batch, grp, epoch):
-        deduped, o_r, o_w = prepare_slice(batch, grp, epoch)
-        return lake.stage_delta(deduped), o_r, o_w
-
+    # are unchanged; a staged-but-uncommitted epoch is an orphan dir.
     pool = ThreadPoolExecutor(max_workers=2)
-    inflight: deque = deque()  # (epoch, grp, is_last, future)
-
-    def commit_one() -> None:
-        epoch, grp, is_last, fut = inflight.popleft()
-        staged, o_r, o_w = fut.result()
-        keys = [f"{p}:{epoch}" for p in grp]
-        finish_slice(
-            grp, epoch, o_r, o_w, lambda: lake.commit_staged_delta(staged, keys)
-        )
-        if is_last:
-            after_epoch_committed(epoch)
-
+    inflight: deque = deque()  # (epoch, parts, future)
     try:
-        for epoch, grp, is_last, batch in slices:
-            inflight.append((epoch, grp, is_last, pool.submit(stage, batch, grp, epoch)))
+        for epoch, parts, batch in plan:
+            inflight.append((epoch, parts, pool.submit(stage, epoch, batch)))
+            due = False
             while len(inflight) >= 2:
-                commit_one()
-            if need_compact:
+                due |= commit(*inflight.popleft())
+            if due:
                 # drain before compacting: compaction's manifest swap
                 # must not race a staged commit
                 while inflight:
-                    commit_one()
+                    commit(*inflight.popleft())
                 lake.compact()
-                need_compact = False
         while inflight:
-            commit_one()
+            commit(*inflight.popleft())
     finally:
         pool.shutdown(wait=False, cancel_futures=True)
 
     lake.compact()
     if lin and cfg.track_run:
         lin.end_run(cfg.run_id, "MIGRATE", total.as_dict())
-    result.lake_version = lake.manifest().version
     total.print_final("Migrate")
     return result
+
+
+def _has_hot_key(rows: DataFrame, cfg: EngineConfig) -> bool:
+    """'auto' skew probe, one cheap job: per-key counts (map-side
+    combined; only distinct keys shuffle) over the key column alone
+    (pruned scan). A key is hot when it exceeds both an absolute floor
+    and the per-partition average; then the two-phase salted fold
+    bounds reducer fan-in."""
+    stats = (
+        rows.groupBy(cfg.key_col)
+        .agg(F.count(F.lit(1)).alias("_c"))
+        .agg(F.max("_c").alias("mx"), F.sum("_c").alias("tot"))
+        .first()
+    )
+    mx, tot = stats["mx"] or 0, stats["tot"] or 0
+    return mx > max(cfg.skew_min_rows, tot / cfg.num_partitions)
 
 
 def _epochs_from_wal_dirs(path: str) -> list[int]:
@@ -342,25 +293,16 @@ def _ensure_lake(spark: SparkSession, cfg: EngineConfig, events: DataFrame) -> L
 
 
 # --------------------------------------------------------------------- expected fold
-def expected_state(
-    events: DataFrame, cfg: EngineConfig, include_tombstones: bool = False
-) -> DataFrame:
+def expected_state(events: DataFrame, cfg: EngineConfig) -> DataFrame:
     """Recompute the final table state from the full WAL in one
     declarative fold: per url keep the (warc_ts, seq)-largest event,
     drop it if that winner is a delete. This is the oracle the verify
     phase compares the materialized lake table against."""
-    ev = apply_origin_filters(events, cfg)
-    if cfg.guardrail_col_size_kb:
-        ev = guardrail_flags(ev, cfg.guardrail_col_size_kb).where(
-            F.size("_large_cols") == 0
-        ).drop("_large_cols")
-    folded = lww_dedup(ev.drop("partition", "batch_epoch"), cfg.key_col, cfg.ts_col, cfg.seq_col)
-    folded = apply_features(folded, cfg)
-    if not include_tombstones:
-        # null-safe: NULL-op rows (e.g. corrections) are live, matching
-        # LakeTable.read — asymmetric filters here would report phantom diffs
-        folded = folded.where(~F.col(cfg.op_col).eqNullSafe(F.lit("D")))
-    return folded
+    rows = origin_rows(events, cfg).drop("partition", "batch_epoch")
+    folded = apply_features(lww_dedup(rows, cfg.key_col, cfg.ts_col, cfg.seq_col), cfg)
+    # null-safe: NULL-op rows (e.g. corrections) are live, matching
+    # LakeTable.read — asymmetric filters here would report phantom diffs
+    return folded.where(~F.col(cfg.op_col).eqNullSafe(F.lit("D")))
 
 
 # --------------------------------------------------------------------- validate
@@ -466,7 +408,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--no-track-run", dest="track_run", action="store_false",
                    default=None, help="disable run-details lineage writes")
     p.add_argument("--lww-strategy", dest="lww_strategy",
-                   choices=["skinny", "salted", "auto"], default="skinny")
+                   choices=["skinny", "auto"], default="skinny")
     p.add_argument("--where", dest="where_condition", default=None,
                    help="user WHERE condition pushed into the scan")
     p.add_argument("--filter-column", dest="filter_column", default=None)

@@ -20,7 +20,8 @@ Three strategies, all pure DataFrame, all ranking by the one
 * ``lww_dedup_salted`` — explicit two-phase (salt, key) → key fold for
   the degenerate case where a single key dominates entire input
   partitions (Zipf head at 10^10 events). Equivalent result, bounded
-  per-reducer fan-in.
+  per-reducer fan-in. ``jobs.ingest`` uses it under
+  ``lww_strategy='auto'`` for the epochs its skew probe finds hot.
 """
 
 from __future__ import annotations

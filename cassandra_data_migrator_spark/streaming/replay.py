@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import EngineConfig
+from ..features import apply_features
+from ..jobs import _ensure_lake, origin_rows
 from ..operators.lww import lww_dedup_skinny
 from ..sources.lake import LakeTable
 
@@ -64,22 +66,13 @@ def stream_ingest(
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         if "lake" not in lake_holder:
-            lake_holder["lake"] = LakeTable.create(
-                batch.sparkSession,
-                cfg.lake_path,
-                batch.drop("partition", "batch_epoch").schema,
-                key_col=cfg.key_col,
-                ts_col=cfg.ts_col,
-                seq_col=cfg.seq_col,
-                op_col=cfg.op_col,
-                num_buckets=cfg.num_buckets,
-            )
-        # skinny LWW (winner agg + semi join): same plan the batch ingest
-        # default uses — measured 5.5x faster than max_by at big epochs
-        deduped = lww_dedup_skinny(
-            batch.drop("partition", "batch_epoch"), cfg.key_col, cfg.ts_col, cfg.seq_col
-        )
-        lake_holder["lake"].append_mor(deduped, [f"stream:{batch_id}"])
+            lake_holder["lake"] = _ensure_lake(batch.sparkSession, cfg, batch)
+        # the batch ingest row path: origin filters + guardrail skip, the
+        # skinny LWW fold (winner agg + semi join — measured 5.5x faster
+        # than max_by at big epochs), then the feature steps
+        rows = origin_rows(batch, cfg).drop("partition", "batch_epoch")
+        winners = lww_dedup_skinny(rows, cfg.key_col, cfg.ts_col, cfg.seq_col)
+        lake_holder["lake"].append_mor(apply_features(winners, cfg), [f"stream:{batch_id}"])
 
     q = (
         stream.writeStream.foreachBatch(apply_batch)

@@ -149,13 +149,14 @@ def test_schema_evolution_lang_null_before_epoch(spark, events, tmp_path):
     assert pre > 0 and post > 0
 
 
-def test_rerun_resplit_partial_epoch(spark, events, tmp_path):
-    """A partially-applied epoch re-drives its pending partitions in
-    finer commit groups (rerunMultiplier analog, TrackRun.java:48-71)."""
+def test_rerun_partial_epoch_commits_pending_once(spark, events, tmp_path, monkeypatch):
+    """A partially-applied epoch (a run that died mid-epoch) resumes by
+    applying all of its pending partitions in one commit; every planned
+    epoch makes exactly one delta commit."""
     from cassandra_data_migrator_spark.jobs import _ensure_lake
     from cassandra_data_migrator_spark.operators.lww import lww_dedup_skinny
 
-    cfg = make_cfg(tmp_path, rerun_multiplier=3)
+    cfg = make_cfg(tmp_path)
     # simulate a run that died mid-epoch: partition 0 of epoch 0 applied
     lake = _ensure_lake(spark, cfg, events)
     first = events.where(
@@ -163,20 +164,43 @@ def test_rerun_resplit_partial_epoch(spark, events, tmp_path):
     ).drop("partition", "batch_epoch")
     lake.append_mor(lww_dedup_skinny(first, "url", "warc_ts", "seq"), ["0:0"])
 
+    commits = []
+    commit_staged_delta = LakeTable.commit_staged_delta
+
+    def counted(self, staged, keys):
+        commits.append(sorted(keys))
+        return commit_staged_delta(self, staged, keys)
+
+    monkeypatch.setattr(LakeTable, "commit_staged_delta", counted)
     res = ingest(spark, cfg, changelog_df=events)
     assert 0 in res.epochs_applied
+    assert len(commits) == len(res.epochs_applied) == N_EVENTS // EPOCH
+    assert [f"{p}:0" for p in range(1, 8)] in commits
     # every partition:epoch key applied exactly once; final state correct
     actual = LakeTable(spark, cfg.lake_path).read()
     expected = expected_state(events, cfg)
     assert actual.exceptAll(expected).count() == 0
     assert expected.exceptAll(actual).count() == 0
-    # lineage shows epoch 0's pending partitions went in 3 commit groups
+    # lineage shows epoch 0's pending partitions went in one commit
     from cassandra_data_migrator_spark.lineage import LineageStore
 
     det = LineageStore(spark, cfg.lineage_path).details()
     e0 = det.where((F.col("batch_epoch") == 0) & (F.col("status") == "PASS"))
     assert e0.count() == 7  # 8 partitions minus the pre-applied one
-    assert e0.select("ts_unix").distinct().count() == 3
+    assert e0.select("ts_unix").distinct().count() == 1
+
+
+def test_unknown_lww_strategy_fails_before_lake_or_lineage(spark, events, tmp_path):
+    """An unknown fold name is a caller error: ingest raises ValueError
+    before it creates the lake or writes any lineage."""
+    import os
+
+    cfg = make_cfg(tmp_path)
+    for strategy in ("salted", "max_by"):
+        with pytest.raises(ValueError, match="lww_strategy"):
+            ingest(spark, cfg, changelog_df=events, lww_strategy=strategy)
+    assert not os.path.exists(cfg.lake_path)
+    assert not os.path.exists(cfg.lineage_path)
 
 
 def test_epoch_landing_during_planning_is_ingested(spark, events, tmp_path, monkeypatch):

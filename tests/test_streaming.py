@@ -59,6 +59,27 @@ def test_stream_resume_without_checkpoint_is_idempotent(spark, tmp_path):
     assert expected.exceptAll(actual).count() == 0
 
 
+def test_stream_ingest_applies_origin_filters(spark, tmp_path):
+    """Stream ingest reads the rows batch ingest applies: with a WHERE
+    condition set, the lake equals the filtered verify fold."""
+    ev = wal.changelog(spark, N_EVENTS, n_urls=200, epoch_size=500, num_partitions=4)
+    wal.write_changelog(ev, str(tmp_path / "wal"))
+    cfg = EngineConfig.from_dict(
+        dict(
+            lake_path=str(tmp_path / "lake"),
+            changelog_path=str(tmp_path / "wal"),
+            num_partitions=4,
+            num_buckets=8,
+            where_condition="seq % 3 <> 0",
+        )
+    )
+    stream_ingest(spark, cfg, str(tmp_path / "ckpt"), max_files_per_trigger=2)
+    actual = LakeTable(spark, cfg.lake_path).read()
+    expected = expected_state(ev, cfg)
+    assert actual.exceptAll(expected).count() == 0
+    assert expected.exceptAll(actual).count() == 0
+
+
 def test_windowed_activity_batch_semantics(spark):
     ev = wal.changelog(spark, 2_000, n_urls=100, epoch_size=500, num_partitions=4)
     agg = windowed_url_activity(ev, window="10 minutes")
