@@ -133,9 +133,13 @@ def ingest(
     if lin and cfg.track_run:
         lin.start_run(cfg.run_id, "MIGRATE", cfg.prev_run_id)
 
-    # applied partitions per epoch, parsed from the manifest's commit keys
+    # applied partitions per epoch, parsed from the manifest's commit
+    # keys: the unrestricted ``p:e`` keys plus this run's own range keys
+    scope = _token_scope(cfg)
     applied_by_epoch: dict[int, set[int]] = {}
     for k in lake.applied_keys():
+        if scope and k.endswith(scope):
+            k = k[: -len(scope)]
         p, _, e = k.partition(":")
         if p.isdigit() and e.isdigit():
             applied_by_epoch.setdefault(int(e), set()).add(int(p))
@@ -187,7 +191,7 @@ def ingest(
         returns whether a compaction is due."""
         staged, obs_read, obs_pass, salted = staged_future.result()
         try:
-            lake.commit_staged_delta(staged, [f"{p}:{epoch}" for p in parts])
+            lake.commit_staged_delta(staged, [f"{p}:{epoch}{scope}" for p in parts])
             read_n, passed_n = obs_read.get["read"], obs_pass.get["passed"]
             jc = JobCounter()
             jc.add("READ", read_n)
@@ -239,6 +243,16 @@ def ingest(
         lin.end_run(cfg.run_id, "MIGRATE", total.as_dict())
     total.print_final("Migrate")
     return result
+
+
+def _token_scope(cfg: EngineConfig) -> str:
+    """Commit-key suffix of a token-restricted run ("" when unrestricted):
+    a run over one token range commits ``p:e@lo..hi``, so a run over
+    another range never takes those keys as its own epochs applied."""
+    if cfg.min_token is None and cfg.max_token is None:
+        return ""
+    lo, hi = ("" if v is None else int(v) for v in (cfg.min_token, cfg.max_token))
+    return f"@{lo}..{hi}"
 
 
 def _has_hot_key(rows: DataFrame, cfg: EngineConfig) -> bool:
@@ -310,11 +324,12 @@ def validate(
     spark: SparkSession,
     cfg: EngineConfig,
     changelog_df: DataFrame | None = None,
-    autocorrect: bool | None = None,
 ) -> tuple[DataFrame, JobCounter]:
     """Replay-and-verify (DiffData analog): recompute expected state,
     full-outer diff against the lake, count VALID/MISSING/MISMATCH, and
-    optionally auto-correct the lake (never deleting EXTRA rows)."""
+    auto-correct the MISSING rows iff ``cfg.autocorrect_missing`` and
+    the MISMATCH rows iff ``cfg.autocorrect_mismatch`` (never deleting
+    EXTRA rows)."""
     events = changelog_df if changelog_df is not None else spark.read.parquet(cfg.changelog_path)
     lake = LakeTable(spark, cfg.lake_path)
     lin = LineageStore(spark, cfg.lineage_path) if cfg.lineage_path else None
@@ -337,27 +352,27 @@ def validate(
     d = d.cache()
     jc = diff_counters(d)
 
-    do_correct = autocorrect if autocorrect is not None else (
-        cfg.autocorrect_missing or cfg.autocorrect_mismatch
-    )
-    if do_correct and (jc.get("MISSING") or jc.get("MISMATCH")):
+    wanted = {"MISSING": cfg.autocorrect_missing, "MISMATCH": cfg.autocorrect_mismatch}
+    found = [s for s in wanted if jc.get(s)]
+    fix = [s for s in found if wanted[s]]
+    if fix:
         import uuid as _uuid
 
-        fix = corrections(d, cfg.key_col)
         # unique key per invocation: LWW corrections are naturally
         # idempotent, so a repeat validate --autocorrect must re-apply
         # (a fixed key would silently no-op yet still report healing)
         res = lake.merge_cow(
-            fix, [f"autocorrect:{cfg.run_id}:{_uuid.uuid4().hex}"], force=True
+            corrections(d, cfg.key_col, fix),
+            [f"autocorrect:{cfg.run_id}:{_uuid.uuid4().hex}"],
+            force=True,
         )
         if res.committed:
-            jc.add("CORRECTED_MISSING", jc.get("MISSING"))
-            jc.add("CORRECTED_MISMATCH", jc.get("MISMATCH"))
+            for s in fix:
+                jc.add(f"CORRECTED_{s}", jc.get(s))
 
     if lin and cfg.track_run:
-        status = "PASS" if not (jc.get("MISSING") or jc.get("MISMATCH")) else (
-            "DIFF_CORRECTED" if do_correct else "DIFF"
-        )
+        left = [s for s in found if not jc.get(f"CORRECTED_{s}")]
+        status = "PASS" if not found else ("DIFF" if left else "DIFF_CORRECTED")
         lin.record_batch(cfg.run_id, -1, -1, status, jc.as_dict(), prev_run_id=cfg.prev_run_id)
         lin.end_run(cfg.run_id, "DIFF_DATA", jc.as_dict())
     jc.print_final("DiffData")
@@ -394,7 +409,8 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--lineage", dest="lineage_path", default="")
     p.add_argument("--events", type=int, default=1_000_000)
     p.add_argument("--epoch-size", type=int, default=100_000)
-    p.add_argument("--autocorrect", action="store_true")
+    p.add_argument("--autocorrect", action="store_true",
+                   help="validate: correct MISSING and MISMATCH rows")
     p.add_argument("--coverage-percent", dest="coverage_percent", type=int, default=None)
     p.add_argument("--min-token", dest="min_token", type=int, default=None)
     p.add_argument("--max-token", dest="max_token", type=int, default=None)
@@ -456,6 +472,8 @@ def main(argv: list[str] | None = None) -> int:
         v = getattr(args, k)
         if v is not None and v != "":
             d[k] = v
+    if args.autocorrect:
+        d["autocorrect_missing"] = d["autocorrect_mismatch"] = True
     d.setdefault("epoch_size", args.epoch_size)
     cfg = EngineConfig.from_dict(d)
     spark = get_spark("cdm-spark-" + args.job)
@@ -467,7 +485,7 @@ def main(argv: list[str] | None = None) -> int:
     elif args.job == "ingest":
         ingest(spark, cfg, lww_strategy=args.lww_strategy)
     elif args.job == "validate":
-        validate(spark, cfg, autocorrect=args.autocorrect)
+        validate(spark, cfg)
     elif args.job == "guardrail":
         guardrail(spark, cfg)
     elif args.job == "dedup":

@@ -107,6 +107,7 @@ class LineageStore:
         """
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         c = counters or {}
         parts = partition if isinstance(partition, list) else [partition]
@@ -127,24 +128,7 @@ class LineageStore:
             * len(parts),
             "ts_unix": [now] * len(parts),
         }
-        schema = pa.schema(
-            [
-                ("table_name", pa.string()),
-                ("run_id", pa.int64()),
-                ("prev_run_id", pa.int64()),
-                ("partition", pa.int32()),
-                ("batch_epoch", pa.int64()),
-                ("status", pa.string()),
-                ("watermark_seq", pa.int64()),
-                ("read_cnt", pa.int64()),
-                ("write_cnt", pa.int64()),
-                ("skipped_cnt", pa.int64()),
-                ("error_cnt", pa.int64()),
-                ("corrected_cnt", pa.int64()),
-                ("ts_unix", pa.float64()),
-            ]
-        )
-        table = pa.Table.from_pydict(rows, schema=schema)
+        table = pa.Table.from_pydict(rows, schema=to_arrow_schema(DETAILS_SCHEMA))
         out = os.path.join(
             self.path, "run_details", f"r{run_id}-e{batch_epoch}-{uuid.uuid4().hex}.parquet"
         )

@@ -18,6 +18,8 @@ vectorized Arrow pandas UDF (no per-row Python), per the north rule.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -118,10 +120,15 @@ def diff_counters(diff_df: DataFrame) -> JobCounter:
     return jc
 
 
-def corrections(diff_df: DataFrame, key_col: str = "url") -> DataFrame:
-    """Rows to upsert for autocorrect (MISSING + MISMATCH), from the
-    expected side — CDM's autocorrect never deletes target-only rows
-    (README.md:129-131), so EXTRA rows are left alone."""
-    bad = diff_df.where(F.col(STATUS_COL).isin("MISSING", "MISMATCH"))
+def corrections(
+    diff_df: DataFrame,
+    key_col: str = "url",
+    statuses: Sequence[str] = ("MISSING", "MISMATCH"),
+) -> DataFrame:
+    """Rows to upsert for autocorrect (the rows whose status is in
+    ``statuses``), from the expected side — CDM's autocorrect never
+    deletes target-only rows (README.md:129-131), so EXTRA rows are
+    left alone."""
+    bad = diff_df.where(F.col(STATUS_COL).isin(*statuses))
     ecols = [c for c in bad.columns if c.startswith("e_")]
     return bad.select(F.col(key_col), *[F.col(c).alias(c[2:]) for c in ecols])

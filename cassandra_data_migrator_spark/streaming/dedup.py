@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from ..config import EngineConfig
 from ..operators import dedup
 from ..operators.lww import lww_dedup_skinny
-from .replay import WAL_SCHEMA
+from .replay import drain_wal
 
 
 def stream_dedup(
@@ -59,11 +59,6 @@ def stream_dedup(
     batch's signatures to the index. Trigger.AvailableNow: drains what
     exists, then stops; rerunning resumes from the checkpoint and
     rewrites (not duplicates) any replayed batch."""
-    stream = (
-        spark.readStream.schema(WAL_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(cfg.changelog_path)
-    )
 
     def apply_batch(batch, batch_id: int) -> None:
         s = batch.sparkSession
@@ -115,14 +110,4 @@ def stream_dedup(
                 .parquet(out)
             )
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    terminated = q.awaitTermination(timeout_sec)
-    if not terminated:
-        q.stop()
-        q.awaitTermination()
-    return q
+    return drain_wal(spark, cfg, checkpoint_dir, apply_batch, max_files_per_trigger, timeout_sec)

@@ -19,6 +19,8 @@ streaming-operator surface CDM lacks (SURVEY §2.7).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -44,6 +46,39 @@ WAL_SCHEMA = T.StructType(
 )
 
 
+def drain_wal(
+    spark: SparkSession,
+    cfg: EngineConfig,
+    checkpoint_dir: str,
+    apply_batch: Callable[[DataFrame, int], None],
+    max_files_per_trigger: int,
+    timeout_sec: int,
+    shape: Callable[[DataFrame], DataFrame] = lambda stream: stream,
+    output_mode: str = "append",
+):
+    """Tail the WAL directory as a streaming file source and run
+    ``apply_batch`` on each micro-batch of ``shape(stream)`` under
+    Trigger.AvailableNow (drain what exists, then stop). Returns only
+    once the query has stopped — on timeout it is stopped first — so no
+    foreachBatch commit is in flight afterwards."""
+    stream = (
+        spark.readStream.schema(WAL_SCHEMA)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(cfg.changelog_path)
+    )
+    q = (
+        shape(stream).writeStream.foreachBatch(apply_batch)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        q.awaitTermination()
+    return q
+
+
 def stream_ingest(
     spark: SparkSession,
     cfg: EngineConfig,
@@ -57,11 +92,6 @@ def stream_ingest(
     micro-batches, then stops — rerunning resumes from the checkpoint
     AND from the lake's applied commit keys (belt and braces).
     """
-    stream = (
-        spark.readStream.schema(WAL_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(cfg.changelog_path)
-    )
     lake_holder: dict[str, LakeTable] = {}
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
@@ -74,18 +104,9 @@ def stream_ingest(
         winners = lww_dedup_skinny(rows, cfg.key_col, cfg.ts_col, cfg.seq_col)
         lake_holder["lake"].append_mor(apply_features(winners, cfg), [f"stream:{batch_id}"])
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    terminated = q.awaitTermination(timeout_sec)
-    if not terminated:
-        # never compact while foreachBatch commits are in flight: the
-        # manifest's optimistic swap would see a concurrent commit
-        q.stop()
-        q.awaitTermination()
+    # the drain has stopped before compacting: the manifest's optimistic
+    # swap must not see a concurrent foreachBatch commit
+    q = drain_wal(spark, cfg, checkpoint_dir, apply_batch, max_files_per_trigger, timeout_sec)
     if "lake" in lake_holder:
         lake_holder["lake"].compact()
     return q

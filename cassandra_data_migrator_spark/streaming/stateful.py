@@ -213,18 +213,14 @@ def stream_feed(
     :func:`stateful_lww_updates` — NOTE processing-time eviction never
     fires under AvailableNow; use event mode (the default) here.
     """
-    from .replay import WAL_SCHEMA
+    from .replay import drain_wal
 
-    stream = (
-        spark.readStream.schema(WAL_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(cfg.changelog_path)
-    )
-    updates = stateful_lww_updates(
-        stream.drop("partition", "batch_epoch"),
-        cfg.key_col, cfg.ts_col, cfg.seq_col,
-        state_ttl_ms=state_ttl_ms, reseed=reseed,
-    )
+    def updates(stream: DataFrame) -> DataFrame:
+        return stateful_lww_updates(
+            stream.drop("partition", "batch_epoch"),
+            cfg.key_col, cfg.ts_col, cfg.seq_col,
+            state_ttl_ms=state_ttl_ms, reseed=reseed,
+        )
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         (
@@ -235,15 +231,7 @@ def stream_feed(
             .parquet(feed_dir)
         )
 
-    q = (
-        updates.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return drain_wal(
+        spark, cfg, checkpoint_dir, apply_batch, max_files_per_trigger, timeout_sec,
+        shape=updates, output_mode="update",
     )
-    terminated = q.awaitTermination(timeout_sec)
-    if not terminated:
-        q.stop()
-        q.awaitTermination()
-    return q

@@ -2,6 +2,8 @@
 (/root/reference SIT/smoke/01_basic_kvp: migrate then validate, assert
 final state + counters)."""
 
+import dataclasses
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -96,7 +98,10 @@ def test_kill_and_resume_no_duplicates(spark, events, tmp_path):
     assert not res2.epochs_applied
 
 
-def test_validate_detects_and_corrects_drift(spark, events, tmp_path):
+def _drifted_lake(spark, events, tmp_path):
+    """Ingest, then rebuild the lake with one url's text tampered
+    (MISMATCH) and another url deleted (MISSING); returns (cfg,
+    tampered_url)."""
     cfg = make_cfg(tmp_path)
     ingest(spark, cfg, changelog_df=events)
     lake = LakeTable(spark, cfg.lake_path)
@@ -118,13 +123,16 @@ def test_validate_detects_and_corrects_drift(spark, events, tmp_path):
     import shutil
 
     shutil.rmtree(cfg.lake_path)
-    cfg2 = make_cfg(tmp_path, lake_path=cfg.lake_path)
     lake2 = LakeTable.create(
-        spark, cfg2.lake_path, drifted.schema, num_buckets=cfg2.num_buckets
+        spark, cfg.lake_path, drifted.schema, num_buckets=cfg.num_buckets
     )
     lake2.merge_cow(drifted, ["seed"])
+    return cfg, tampered_url
 
-    d, jc = validate(spark, cfg2, changelog_df=events, autocorrect=False)
+
+def test_validate_detects_and_corrects_drift(spark, events, tmp_path):
+    cfg2, tampered_url = _drifted_lake(spark, events, tmp_path)
+    d, jc = validate(spark, cfg2, changelog_df=events)
     assert jc.get("MISMATCH") == 1
     assert jc.get("MISSING") == 1
     assert (
@@ -132,10 +140,26 @@ def test_validate_detects_and_corrects_drift(spark, events, tmp_path):
     )
 
     # autocorrect heals; second validate is green
-    d2, jc2 = validate(spark, cfg2, changelog_df=events, autocorrect=True)
+    fix_all = dataclasses.replace(cfg2, autocorrect_missing=True, autocorrect_mismatch=True)
+    d2, jc2 = validate(spark, fix_all, changelog_df=events)
     assert jc2.get("CORRECTED_MISSING") >= 1
-    d3, jc3 = validate(spark, cfg2, changelog_df=events, autocorrect=False)
+    d3, jc3 = validate(spark, cfg2, changelog_df=events)
     assert jc3.get("MISSING") == 0 and jc3.get("MISMATCH") == 0
+
+
+def test_validate_corrects_only_the_flagged_status(spark, events, tmp_path):
+    """autocorrect_missing alone heals the MISSING row and leaves the
+    MISMATCH row; with a row left uncorrected the run's lineage status
+    is DIFF, not DIFF_CORRECTED."""
+    from cassandra_data_migrator_spark.lineage import LineageStore
+
+    cfg, _ = _drifted_lake(spark, events, tmp_path)
+    _, jc = validate(spark, dataclasses.replace(cfg, autocorrect_missing=True), changelog_df=events)
+    assert jc.get("CORRECTED_MISSING") == 1 and jc.get("CORRECTED_MISMATCH") == 0
+    _, jc2 = validate(spark, cfg, changelog_df=events)
+    assert jc2.get("MISSING") == 0 and jc2.get("MISMATCH") == 1
+    det = LineageStore(spark, cfg.lineage_path).details().where("batch_epoch = -1")
+    assert [r["status"] for r in det.collect()] == ["DIFF", "DIFF"]
 
 
 def test_schema_evolution_lang_null_before_epoch(spark, events, tmp_path):
@@ -286,6 +310,13 @@ def test_token_range_restricted_ingest(spark, events, tmp_path):
     assert got.exceptAll(expected).count() == 0
     assert expected.exceptAll(got).count() == 0
     assert got.count() < full.count()
+    # the complement range into the same lake applies its own epochs
+    # (the first run's range-scoped commit keys do not cover them)
+    res = ingest(spark, make_cfg(tmp_path, min_token=mid + 1), changelog_df=events)
+    assert res.epochs_applied and not res.epochs_skipped
+    got = LakeTable(spark, cfg.lake_path).read()
+    assert got.exceptAll(full).count() == 0
+    assert full.exceptAll(got).count() == 0
 
 def test_asof_join_matches_lake_built_up_to_timestamp(spark, events, tmp_path):
     """Cross-check of the two point-in-time paths: for sampled cut

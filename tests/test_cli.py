@@ -69,6 +69,26 @@ def test_cli_run_id_lineage_roundtrip(spark, workdir):
     assert len(r3) == 1 and r3.iloc[0].prev_run_id == 2 and r3.iloc[0].status == "PASS"
 
 
+def test_cli_validate_properties_autocorrect(spark, workdir, tmp_path):
+    """spark.cdm.autocorrect.* keys in --properties drive validate's
+    corrections without the --autocorrect flag."""
+    assert jobs.main([
+        "ingest", "--changelog", workdir["wal"], "--lake", workdir["lake"],
+        "--where", "seq % 2 = 0",  # drift: the lake misses the odd-seq events
+    ]) == 0
+    pfile = tmp_path / "cdm.properties"
+    pfile.write_text(
+        "spark.cdm.autocorrect.missing=true\n"
+        "spark.cdm.autocorrect.mismatch=true\n"
+    )
+    args = ["validate", "--changelog", workdir["wal"], "--lake", workdir["lake"],
+            "--lineage", workdir["lineage"]]
+    assert jobs.main(args + ["--properties", str(pfile), "--run-id", "1"]) == 0
+    assert jobs.main(args + ["--run-id", "2"]) == 0
+    det = LineageStore(spark, workdir["lineage"]).details().toPandas()
+    assert dict(zip(det.run_id, det.status)) == {1: "DIFF_CORRECTED", 2: "PASS"}
+
+
 def test_cli_no_track_run(spark, workdir):
     assert jobs.main([
         "ingest", "--changelog", workdir["wal"], "--lake", workdir["lake"],
