@@ -76,8 +76,8 @@ def apply_origin_filters(df: DataFrame, cfg: EngineConfig) -> DataFrame:
 
 def origin_rows(events: DataFrame, cfg: EngineConfig) -> DataFrame:
     """The change rows a run applies: the origin filters, then the
-    guardrail skip (oversize rows are SKIPPED, not written). Batch
-    ingest, stream ingest and the verify fold all read through this."""
+    guardrail skip (oversize rows are SKIPPED, not written). Ingest and
+    the verify fold (``expected_state``) both read through this."""
     rows = apply_origin_filters(events, cfg)
     if cfg.guardrail_col_size_kb:
         rows = guardrail_flags(rows, cfg.guardrail_col_size_kb).where(
@@ -93,7 +93,6 @@ def ingest(
     changelog_df: DataFrame | None = None,
     compact_every: int = 8,
     lww_strategy: str = "skinny",
-    fail_at_epoch: int | None = None,
 ) -> RunResult:
     """Replay the WAL epoch-by-epoch into the lake table (Migrate analog).
 
@@ -108,8 +107,6 @@ def ingest(
     folds with ``lww_dedup_salted`` when one key exceeds
     max(cfg.skew_min_rows, rows/num_partitions), else skinny; decisions
     land in ``RunResult.epochs_salted``).
-    ``fail_at_epoch`` injects a crash *after* that many epochs committed,
-    for the kill-and-resume test.
     """
     if lww_strategy not in ("skinny", "auto"):
         raise ValueError(f"lww_strategy must be 'skinny' or 'auto', not {lww_strategy!r}")
@@ -208,10 +205,7 @@ def ingest(
         if salted:
             result.epochs_salted.append(epoch)
         result.epochs_applied.append(epoch)
-        done = len(result.epochs_applied)
-        if fail_at_epoch is not None and done >= fail_at_epoch:
-            raise RuntimeError(f"injected failure after {done} epochs")
-        return bool(compact_every) and done % compact_every == 0
+        return bool(compact_every) and len(result.epochs_applied) % compact_every == 0
 
     # two-deep epoch pipeline: epoch k+1's scan+filter+LWW (the
     # Spark-heavy part) STAGES on a worker thread while epoch k's
@@ -505,7 +499,7 @@ def main(argv: list[str] | None = None) -> int:
         print(f"Final Candidate Pair Count: {n}")
     elif args.job == "feed":
         # materialize the LWW change feed: per micro-batch, the keys
-        # whose winner changed, exactly-once via batch_id= overwrite
+        # whose winner changed, idempotent per checkpoint (batch_id= overwrite)
         from .streaming.stateful import stream_feed
 
         if not (args.feed_dir and args.checkpoint_dir):

@@ -5,12 +5,17 @@ jars, so this module implements the minimal lake-table contract the
 engine needs, in the same shape Iceberg provides it:
 
   * **snapshot isolation** — a table is a directory of immutable parquet
-    data files plus a ``_manifests/`` log; readers resolve the CURRENT
-    pointer once and only ever see a committed snapshot.
-  * **atomic commits** — a commit writes new data files, then a new
-    manifest JSON, then atomically swaps the CURRENT pointer
-    (``os.replace``). A crash at any point leaves either the old or the
-    new snapshot, never a torn one (orphan data files are harmless).
+    data files plus a ``_manifests/`` log; readers resolve the head
+    version once and only ever see a committed snapshot.
+  * **atomic commits** — a commit writes new data files, then its
+    manifest JSON to a tmp file, then links it to ``v{N+1}.json`` with
+    ``os.link``, which fails if the name exists. That link is the only
+    commit point (the Delta Lake log design, Armbrust et al., VLDB
+    2020). The head is the highest contiguous version: start from the
+    ``CURRENT`` hint, then step forward while the next version file
+    exists. A crash at any point leaves either the old or the new
+    snapshot, never a torn one, and the next commit goes on top of it
+    with no manual step (orphan data files are harmless).
   * **idempotent commit keys** — every commit carries an application key
     (``partition:batch_epoch`` in the CDC jobs). Keys live *inside* the
     manifest, so "was this batch applied?" and "apply this batch" are the
@@ -26,7 +31,7 @@ engine needs, in the same shape Iceberg provides it:
     through the widened schema yield nulls for the new columns (CDM's
     missing-column => unset semantics, ``CqlTable.java:408-428``).
   * **merge-on-read and copy-on-write** — ingest appends delta files
-    (``stage_delta`` + ``commit_staged_delta``, or ``append_mor``) and
+    (``stage_delta`` + ``commit_staged_delta``) and
     defers last-writer-wins resolution to read time (Hudi/Iceberg MoR
     analog), with ``compact()`` folding deltas into the base.
     ``merge_cow`` (validate's autocorrect) and ``merge_counter`` rewrite
@@ -116,6 +121,14 @@ class Manifest:
     def to_json(self) -> str:
         return json.dumps(self.__dict__, sort_keys=True)
 
+    def split_keys(self, commit_keys: list[str] | str) -> tuple[list[str], list[str]]:
+        """(new, already applied) commit keys, in order and without
+        repeats. ``applied`` becomes a set once per commit, so the check
+        costs O(applied + keys), not a list scan per key."""
+        applied = set(self.applied)
+        keys = dict.fromkeys([commit_keys] if isinstance(commit_keys, str) else commit_keys)
+        return [k for k in keys if k not in applied], [k for k in keys if k in applied]
+
     @classmethod
     def from_json(cls, s: str) -> "Manifest":
         return cls(**json.loads(s))
@@ -143,16 +156,42 @@ class LakeTable:
     def _mdir(self) -> str:
         return os.path.join(self.path, MANIFEST_DIR)
 
+    def _vpath(self, version: int) -> str:
+        return os.path.join(self._mdir, f"v{version:08d}.json")
+
+    def _head(self) -> int:
+        """The committed head version (0 before the first commit): the
+        CURRENT hint, then forward while the next version file exists.
+        The hint lags the head after a crash between a commit's link and
+        its hint write; vacuum never deletes the version it names."""
+        try:
+            with open(os.path.join(self._mdir, CURRENT_FILE)) as f:
+                v = int(f.read().strip())
+        except FileNotFoundError:
+            v = 0
+        while os.path.exists(self._vpath(v + 1)):
+            v += 1
+        return v
+
+    def _write_hint(self, version: int) -> None:
+        """Point the CURRENT hint at ``version`` (tmp, fsync, replace)."""
+        cur = os.path.join(self._mdir, CURRENT_FILE)
+        tmp = cur + f".tmp.{uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
+            f.write(str(version))
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, cur)
+
     def exists(self) -> bool:
-        return os.path.exists(os.path.join(self._mdir, CURRENT_FILE))
+        return self._head() > 0
 
     def manifest(self, version: int | None = None) -> Manifest:
-        """The CURRENT manifest, or a specific retained version (time
+        """The head manifest, or a specific retained version (time
         travel; vacuumed versions raise with the retained range)."""
         if version is None:
-            with open(os.path.join(self._mdir, CURRENT_FILE)) as f:
-                version = int(f.read().strip())
-        mpath = os.path.join(self._mdir, f"v{version:08d}.json")
+            version = self._head()
+        mpath = self._vpath(version)
         if not os.path.exists(mpath):
             avail = self.versions()
             raise ValueError(
@@ -171,40 +210,37 @@ class LakeTable:
                 out.append(int(fn[1:-5]))
         return sorted(out)
 
-    def _swap(self, mf: Manifest, expected_parent: int) -> None:
-        """Atomically publish a new manifest version.
+    def _commit(self, mf: Manifest) -> None:
+        """Commit ``mf``, read at version N, as version N+1.
+
+        The manifest is written to a tmp path and fsync'd, then linked
+        to ``v{N+1}.json``: that atomic link is the commit. A crash
+        before it leaves only an ignorable ``*.tmp.*`` file; after it the
+        version is committed, and the CURRENT hint written last only
+        shortens the next head probe.
 
         Two-layer concurrency guard (CDM likewise assumes one run at a
         time per table, enforced via run_id in cdm_run_info):
 
-        1. optimistic read check — the parent version on disk must still
-           be ``expected_parent``;
-        2. the version file itself is created with ``O_CREAT|O_EXCL`` —
-           if two writers race past check 1, exactly one wins the create
-           and the other fails loudly instead of silently discarding the
-           winner's data files and applied keys.
-
-        The version file is written to a tmp path and published with
-        ``os.link`` (atomic; raises ``FileExistsError`` on a real
-        concurrent writer). A crash mid-write therefore leaves only an
-        ignorable ``*.tmp.*`` file, never a partial ``v{N}.json``; the
-        wedging window (complete-but-unswapped orphan) shrinks to the
-        instant between the link and the CURRENT swap.
+        1. optimistic read check — the head must still be N, so a writer
+           whose parent was committed over (and perhaps vacuumed) cannot
+           link a forked ``v{N+1}``;
+        2. the link fails if ``v{N+1}.json`` exists — if two writers race
+           past check 1, exactly one wins and the other fails loudly
+           instead of silently discarding the winner's data files and
+           applied keys.
         """
         referenced = {
             f for store in (mf.base, mf.deltas) for fs in store.values() for f in fs
         }
         mf.stats = {f: s for f, s in mf.stats.items() if f in referenced}
-        cur = os.path.join(self._mdir, CURRENT_FILE)
-        if os.path.exists(cur):
-            with open(cur) as f:
-                on_disk = int(f.read().strip())
-            if on_disk != expected_parent:
-                raise RuntimeError(
-                    f"concurrent commit detected: expected v{expected_parent}, found v{on_disk}"
-                )
-        os.makedirs(self._mdir, exist_ok=True)
-        mpath = os.path.join(self._mdir, f"v{mf.version:08d}.json")
+        head = self._head()
+        if head != mf.version:
+            raise RuntimeError(
+                f"concurrent commit detected: expected v{mf.version}, found v{head}"
+            )
+        mf.version += 1
+        mpath = self._vpath(mf.version)
         mtmp = mpath + f".tmp.{uuid.uuid4().hex}"
         with open(mtmp, "w") as f:
             f.write(mf.to_json())
@@ -214,18 +250,11 @@ class LakeTable:
             os.link(mtmp, mpath)
         except FileExistsError:
             raise RuntimeError(
-                f"concurrent commit detected: manifest {mpath} already exists "
-                "(another writer, or an orphan from a crashed commit — "
-                "delete it to recover if no other writer is active)"
+                f"concurrent commit detected: manifest {mpath} already exists"
             ) from None
         finally:
             os.unlink(mtmp)
-        ctmp = cur + f".tmp.{uuid.uuid4().hex}"
-        with open(ctmp, "w") as f:
-            f.write(str(mf.version))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(ctmp, cur)  # the atomic commit point
+        self._write_hint(mf.version)
 
     # ------------------------------------------------------------- create
     @classmethod
@@ -246,7 +275,7 @@ class LakeTable:
             return t
         os.makedirs(t._mdir, exist_ok=True)
         mf = Manifest(
-            version=1,
+            version=0,
             schema_json=json.dumps(schema.jsonValue()),
             num_buckets=num_buckets,
             key_col=key_col,
@@ -255,7 +284,7 @@ class LakeTable:
             op_col=op_col,
             props={"ttl_col": ttl_col} if ttl_col else {},
         )
-        t._swap(mf, expected_parent=1)  # first CURRENT write; no parent file exists
+        t._commit(mf)
         return t
 
     # ------------------------------------------------------------- helpers
@@ -383,8 +412,7 @@ class LakeTable:
 
         Dropping every delta is safe: ``compact`` and ``merge_cow`` fold
         all pending deltas into ``resolved``, and ``merge_counter`` only
-        runs when there are none."""
-        parent = mf.version
+        runs when there are none. ``keys`` are new (``split_keys``)."""
         commit_dir = f"data/c-{uuid.uuid4().hex}"
         out = os.path.join(self.path, commit_dir)
         (
@@ -402,13 +430,12 @@ class LakeTable:
                     if fn.endswith(".parquet")
                 ]
         mf.stats.update(self._collect_stats(new_files, mf))
-        mf.version = parent + 1
         rewritten = sorted(set(buckets) | {int(b) for b in new_files})
         for b in rewritten:
             mf.base[str(b)] = new_files.get(str(b), [])
         mf.deltas = {}
-        mf.applied.extend(k for k in keys if k not in mf.applied)
-        self._swap(mf, expected_parent=parent)
+        mf.applied.extend(keys)
+        self._commit(mf)
         return CommitResult(True, mf.version, buckets_rewritten=len(rewritten))
 
     # ------------------------------------------------------------- merge (CoW)
@@ -428,9 +455,9 @@ class LakeTable:
         Pending MoR deltas are folded in the same commit: they may hold
         any key, so the rewrite widens to every base bucket.
         """
-        keys = [commit_keys] if isinstance(commit_keys, str) else list(commit_keys)
         mf = self.manifest()
-        if all(k in mf.applied for k in keys):
+        keys, _ = mf.split_keys(commit_keys)
+        if not keys:
             return CommitResult(False, mf.version)
         mf, batch, affected = self._prepare_merge(mf, batch)
         if any(mf.deltas.values()):
@@ -471,10 +498,9 @@ class LakeTable:
         already-applied partitions' deltas, so partial overlap raises
         instead of relying on a caller pre-filter contract.
         """
-        keys = [commit_keys] if isinstance(commit_keys, str) else list(commit_keys)
         mf = self.manifest()
-        overlap = [k for k in keys if k in mf.applied]
-        if len(overlap) == len(keys):
+        keys, overlap = mf.split_keys(commit_keys)
+        if not keys:
             return CommitResult(False, mf.version)
         if overlap:
             raise ValueError(
@@ -503,12 +529,11 @@ class LakeTable:
 
     # ------------------------------------------------------------- append (MoR)
     def stage_delta(self, batch: DataFrame) -> dict:
-        """Write a MoR delta file set WITHOUT publishing it — the
-        parallel half of ``append_mor``, safe to run concurrently from
-        several driver threads (the epoch-pipelining path in
-        ``jobs.ingest``). Files land under a unique commit dir and stay
-        invisible until :meth:`commit_staged_delta` links them into a
-        manifest; a crash before that leaves harmless orphans.
+        """Write a MoR delta file set WITHOUT publishing it, safe to run
+        concurrently from several driver threads (the epoch-pipelining
+        path in ``jobs.ingest``). Files land under a unique commit dir
+        and stay invisible until :meth:`commit_staged_delta` links them
+        into a manifest; a crash before that leaves harmless orphans.
 
         Deltas are table-wide by design (a bucket-aligned write was
         measured and lost; see the module docstring): the batch is
@@ -537,31 +562,16 @@ class LakeTable:
     ) -> CommitResult:
         """Publish a staged delta file set atomically (ordered, cheap —
         manifest JSON only, no Spark job)."""
-        keys = [commit_keys] if isinstance(commit_keys, str) else list(commit_keys)
         mf = self.manifest()
-        if all(k in mf.applied for k in keys):
+        keys, _ = mf.split_keys(commit_keys)
+        if not keys:
             return CommitResult(False, mf.version)
-        parent = mf.version
         mf = self._evolve_schema(mf, T.StructType.fromJson(json.loads(staged["schema_json"])))
-        mf.version = parent + 1
         mf.deltas.setdefault(GLOBAL_DELTA, []).extend(staged["files"][GLOBAL_DELTA])
         mf.stats.update(staged.get("stats", {}))
-        mf.applied.extend(k for k in keys if k not in mf.applied)
-        self._swap(mf, expected_parent=parent)
-        return CommitResult(True, mf.version, buckets_rewritten=0)
-
-    def append_mor(self, batch: DataFrame, commit_keys: list[str] | str) -> CommitResult:
-        """Append a delta file set; LWW resolution deferred to read time.
-
-        Merge-on-read: O(batch) write cost per commit regardless of table
-        size — the scale path for 10^10-event ingest; ``compact()``
-        amortizes the read cost.
-        """
-        keys = [commit_keys] if isinstance(commit_keys, str) else list(commit_keys)
-        mf = self.manifest()
-        if all(k in mf.applied for k in keys):
-            return CommitResult(False, mf.version)
-        return self.commit_staged_delta(self.stage_delta(batch), keys)
+        mf.applied.extend(keys)
+        self._commit(mf)
+        return CommitResult(True, mf.version)
 
     def compact(self, expire_as_of=None) -> CommitResult:
         """Fold the pending MoR deltas into the base. Deltas are
@@ -601,18 +611,12 @@ class LakeTable:
         be swept as garbage. Driver-side file ops only, no Spark job."""
         if retain_last < 1:
             raise ValueError("retain_last must be >= 1")
+        # hint the head before any manifest goes, so the head probe
+        # never has to step across a deleted version
+        self._write_hint(self._head())
         versions = self.versions()
-        # the CURRENT-pointed version is ALWAYS retained, independent of
-        # retain_last: _swap publishes v{N}.json before swapping CURRENT,
-        # so a crash in that window leaves an orphan manifest NEWER than
-        # CURRENT — counting retention from the newest file would then
-        # delete the live manifest (and data files the orphan doesn't
-        # reference), bricking the table
-        with open(os.path.join(self._mdir, CURRENT_FILE)) as f:
-            current_v = int(f.read().strip())
-        keep_versions = set(versions[-retain_last:]) | {current_v}
         keep_files: set[str] = set()
-        for v in sorted(keep_versions):
+        for v in versions[-retain_last:]:
             mf = self.manifest(v)
             for store in (mf.base, mf.deltas):
                 for files in store.values():
@@ -621,9 +625,8 @@ class LakeTable:
         # mid-vacuum then leaves only orphan (unreferenced) data files —
         # harmless, reclaimed by the next vacuum — never a readable
         # manifest version pointing at deleted files
-        for v in versions:
-            if v not in keep_versions:
-                os.remove(os.path.join(self._mdir, f"v{v:08d}.json"))
+        for v in versions[:-retain_last]:
+            os.remove(self._vpath(v))
         removed = 0
         data_root = os.path.join(self.path, "data")
         if os.path.isdir(data_root):

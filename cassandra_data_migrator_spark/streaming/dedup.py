@@ -12,13 +12,13 @@ file source, and per micro-batch
    with itself),
 4. append the batch's signatures to the index.
 
-Exactly-once without a transactional sink: both outputs are written
+Idempotent without a transactional sink: both outputs are written
 with dynamic partition overwrite into a ``batch_id=`` partition, so a
-foreachBatch retry (at-least-once with a stable batch_id) rewrites the
-same partitions byte-identically instead of duplicating — the same
-idempotence idea as the lake's ``stream:<batch_id>`` commit keys in
-``streaming/replay.py``, re-expressed for plain parquet outputs. The
-index read filters ``batch_id < current`` (partition-pruned), so a
+foreachBatch retry or a rerun with the same checkpoint rewrites the
+same partitions byte-identically instead of duplicating. ``batch_id``
+is stable only together with the checkpoint: after a lost checkpoint
+the micro-batches are cut afresh, and the outputs are not idempotent.
+The index read filters ``batch_id < current`` (partition-pruned), so a
 retried batch never pairs against its own half-written output.
 
 At 10^10 docs the index side is exactly the lake-bucketed banded store

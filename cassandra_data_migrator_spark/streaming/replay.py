@@ -1,16 +1,14 @@
-"""Structured Streaming replay of the commitlog/WAL.
+"""Structured Streaming tail of the commitlog/WAL.
 
-The batch replayer (jobs.ingest) drives epochs itself; this module
-tails the same epoch-partitioned WAL directory as a streaming file
-source and applies each micro-batch through ``foreachBatch`` into the
-lake table.
-
-Exactly-once: Spark's checkpoint gives at-least-once foreachBatch
-invocations with a stable ``batch_id``; the lake commit keyed by
-``stream:<batch_id>`` makes the apply idempotent, so retries and
-checkpoint-resume never double-apply — the streaming analog of the
-reference's rerun-pending-ranges protocol
-(``job/BasePartitionJob.scala:41-58``).
+The lake's ingest path is ``jobs.ingest``: it plans the WAL's epochs
+and commits each under data-named ``partition:batch_epoch`` keys, so
+repeated calls over a growing WAL tail it exactly once. This module
+holds what the streaming jobs (``streaming.dedup``,
+``streaming.stateful``) share: the WAL's streaming schema and
+``drain_wal``, which tails the same epoch-partitioned WAL directory as
+a streaming file source and hands each micro-batch to ``foreachBatch``.
+Spark's checkpoint gives at-least-once foreachBatch invocations whose
+``batch_id`` is stable only together with that checkpoint.
 
 Also provides a watermarked windowed aggregation over the stream
 (late-data-tolerant url activity counts) to cover the
@@ -26,10 +24,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import EngineConfig
-from ..features import apply_features
-from ..jobs import _ensure_lake, origin_rows
-from ..operators.lww import lww_dedup_skinny
-from ..sources.lake import LakeTable
 
 WAL_SCHEMA = T.StructType(
     [
@@ -53,7 +47,7 @@ def drain_wal(
     apply_batch: Callable[[DataFrame, int], None],
     max_files_per_trigger: int,
     timeout_sec: int,
-    shape: Callable[[DataFrame], DataFrame] = lambda stream: stream,
+    shape: Callable[[DataFrame], DataFrame] = lambda events: events,
     output_mode: str = "append",
 ):
     """Tail the WAL directory as a streaming file source and run
@@ -76,39 +70,6 @@ def drain_wal(
     if not q.awaitTermination(timeout_sec):
         q.stop()
         q.awaitTermination()
-    return q
-
-
-def stream_ingest(
-    spark: SparkSession,
-    cfg: EngineConfig,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 4,
-    timeout_sec: int = 600,
-):
-    """Tail the WAL directory and apply micro-batches into the lake.
-
-    Uses Trigger.AvailableNow: processes everything present, in bounded
-    micro-batches, then stops — rerunning resumes from the checkpoint
-    AND from the lake's applied commit keys (belt and braces).
-    """
-    lake_holder: dict[str, LakeTable] = {}
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        if "lake" not in lake_holder:
-            lake_holder["lake"] = _ensure_lake(batch.sparkSession, cfg, batch)
-        # the batch ingest row path: origin filters + guardrail skip, the
-        # skinny LWW fold (winner agg + semi join — measured 5.5x faster
-        # than max_by at big epochs), then the feature steps
-        rows = origin_rows(batch, cfg).drop("partition", "batch_epoch")
-        winners = lww_dedup_skinny(rows, cfg.key_col, cfg.ts_col, cfg.seq_col)
-        lake_holder["lake"].append_mor(apply_features(winners, cfg), [f"stream:{batch_id}"])
-
-    # the drain has stopped before compacting: the manifest's optimistic
-    # swap must not see a concurrent foreachBatch commit
-    q = drain_wal(spark, cfg, checkpoint_dir, apply_batch, max_files_per_trigger, timeout_sec)
-    if "lake" in lake_holder:
-        lake_holder["lake"].compact()
     return q
 
 

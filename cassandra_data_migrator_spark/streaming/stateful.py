@@ -41,7 +41,7 @@ ReseedFn = Callable[[object], Optional[Tuple[object, int]]]
 
 
 def stateful_lww_updates(
-    stream: DataFrame,
+    events: DataFrame,
     key_col: str = "url",
     ts_col: str = "warc_ts",
     seq_col: str = "seq",
@@ -90,8 +90,8 @@ def stateful_lww_updates(
         raise ValueError("timeout_mode must be 'event' or 'processing'")
     event_mode = timeout_mode == "event"
     if state_ttl_ms is not None and event_mode:
-        stream = stream.withWatermark(ts_col, watermark_delay)
-    out_schema = stream.schema
+        events = events.withWatermark(ts_col, watermark_delay)
+    out_schema = events.schema
 
     def _ordkey(ts: object, seq: int) -> tuple:
         # batch LWW ordering: nulls-smallest on ts, seq tie-break
@@ -176,7 +176,7 @@ def stateful_lww_updates(
     else:
         timeout_conf = GroupStateTimeout.ProcessingTimeTimeout
 
-    grouped = stream.groupBy(key_col)
+    grouped = events.groupBy(key_col)
     return grouped.applyInPandasWithState(
         update,
         outputStructType=out_schema,
@@ -203,11 +203,13 @@ def stream_feed(
     (at most one row per key per batch, strictly increasing (ts, seq)
     per key across partitions).
 
-    Exactly-once without a transactional sink: dynamic partition
-    overwrite on ``batch_id`` — a foreachBatch retry rewrites the same
-    partition byte-identically instead of duplicating (same idempotence
-    idea as ``streaming/dedup.py``). Trigger.AvailableNow drains what
-    exists then stops; rerunning with the checkpoint emits nothing new.
+    Idempotent without a transactional sink: dynamic partition
+    overwrite on ``batch_id`` — a foreachBatch retry or a checkpointed
+    rerun rewrites the same partition byte-identically instead of
+    duplicating (as in ``streaming/dedup.py``). ``batch_id`` is stable
+    only together with the checkpoint, so this does not hold after a
+    lost checkpoint. Trigger.AvailableNow drains what exists then
+    stops; rerunning with the checkpoint emits nothing new.
 
     ``state_ttl_ms``/``reseed`` pass through to
     :func:`stateful_lww_updates` — NOTE processing-time eviction never
@@ -215,9 +217,9 @@ def stream_feed(
     """
     from .replay import drain_wal
 
-    def updates(stream: DataFrame) -> DataFrame:
+    def updates(events: DataFrame) -> DataFrame:
         return stateful_lww_updates(
-            stream.drop("partition", "batch_epoch"),
+            events.drop("partition", "batch_epoch"),
             cfg.key_col, cfg.ts_col, cfg.seq_col,
             state_ttl_ms=state_ttl_ms, reseed=reseed,
         )

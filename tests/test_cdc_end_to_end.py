@@ -3,6 +3,7 @@
 final state + counters)."""
 
 import dataclasses
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -55,8 +56,11 @@ def test_changelog_has_skew_and_evolution(spark, events):
     assert pre == 0 and post > 0
 
 
-def test_ingest_matches_expected_fold(spark, events, tmp_path):
-    cfg = make_cfg(tmp_path)
+@pytest.mark.parametrize("where", [None, "seq % 3 <> 0"], ids=["unfiltered", "where"])
+def test_ingest_matches_expected_fold(spark, events, tmp_path, where):
+    """With or without a WHERE condition the lake equals the verify
+    fold; READ counts events before the origin filters."""
+    cfg = make_cfg(tmp_path, where_condition=where)
     res = ingest(spark, cfg, changelog_df=events)
     assert res.counters.get("READ") == N_EVENTS
     lake = LakeTable(spark, cfg.lake_path)
@@ -78,10 +82,21 @@ def test_validate_green(spark, events, tmp_path):
     assert jc.get("VALID") > 0
 
 
-def test_kill_and_resume_no_duplicates(spark, events, tmp_path):
+def test_kill_and_resume_no_duplicates(spark, events, tmp_path, monkeypatch):
     cfg = make_cfg(tmp_path)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        ingest(spark, cfg, changelog_df=events, fail_at_epoch=3)
+    commit_staged_delta = LakeTable.commit_staged_delta
+    done = []
+
+    def killed_after_three(self, staged, keys):
+        if len(done) == 3:
+            raise RuntimeError("killed after 3 epoch commits")
+        done.append(commit_staged_delta(self, staged, keys))
+        return done[-1]
+
+    with monkeypatch.context() as m:
+        m.setattr(LakeTable, "commit_staged_delta", killed_after_three)
+        with pytest.raises(RuntimeError, match="killed"):
+            ingest(spark, cfg, changelog_df=events)
     lake = LakeTable(spark, cfg.lake_path)
     n_applied_before = len(lake.applied_keys())
     assert n_applied_before > 0
@@ -186,7 +201,8 @@ def test_rerun_partial_epoch_commits_pending_once(spark, events, tmp_path, monke
     first = events.where(
         (F.col("batch_epoch") == 0) & (F.col("partition") == 0)
     ).drop("partition", "batch_epoch")
-    lake.append_mor(lww_dedup_skinny(first, "url", "warc_ts", "seq"), ["0:0"])
+    staged = lake.stage_delta(lww_dedup_skinny(first, "url", "warc_ts", "seq"))
+    lake.commit_staged_delta(staged, ["0:0"])
 
     commits = []
     commit_staged_delta = LakeTable.commit_staged_delta
@@ -433,34 +449,147 @@ def test_time_travel_reads_and_vacuum(spark, events, tmp_path):
     assert count_parquet() == n_before - removed
 
 
-def test_vacuum_survives_swap_crash_orphan(spark, events, tmp_path):
-    """_swap publishes v{N}.json BEFORE swapping CURRENT; a crash in
-    that window leaves an orphan manifest newer than CURRENT. vacuum
-    must still retain the CURRENT-pointed manifest and its data files —
-    counting retention from the newest file would delete the live
-    version and brick the table."""
-    import json
-    import os
-    import shutil
+def _crash_commit(m, point: str, k: int) -> None:
+    """Make the k-th lake commit crash at ``point``: 'link' raises in
+    place of linking its ``v{N}.json``; 'hint' raises after that link,
+    in place of the CURRENT hint write."""
+    name, target = ("link", ".json") if point == "link" else ("replace", "CURRENT")
+    real, calls = getattr(os, name), []
 
+    def crashing(src, dst, *args, **kwargs):
+        if os.path.basename(os.path.dirname(dst)) == "_manifests" and dst.endswith(target):
+            calls.append(dst)
+            if len(calls) == k:
+                raise OSError(f"injected crash at the {point} of commit {k}")
+        return real(src, dst, *args, **kwargs)
+
+    m.setattr(os, name, crashing)
+
+
+def _assert_lake_exact(lake, want_rows, events, num_partitions):
+    """Lake rows equal ``want_rows`` (sorted by url) and every
+    partition:epoch key is applied exactly once."""
+    assert lake.read().orderBy("url").collect() == want_rows
+    epochs = {r[0] for r in events.select("batch_epoch").distinct().collect()}
+    assert sorted(lake.manifest().applied) == sorted(
+        f"{p}:{e}" for p in range(num_partitions) for e in epochs
+    )
+
+
+def _expected_rows(lake, events, cfg):
+    return expected_state(events, cfg).select(*lake.read().columns).orderBy("url").collect()
+
+
+def test_crash_between_link_and_hint_resumes(spark, events, tmp_path, monkeypatch):
+    """A crash after an ingest commit's version link and before its
+    CURRENT hint write leaves a committed version beyond the hint; a
+    plain rerun of ingest finishes from it, with no manual step."""
+    cfg = make_cfg(tmp_path)
+    with monkeypatch.context() as m:
+        _crash_commit(m, "hint", 4)
+        with pytest.raises(OSError, match="injected crash"):
+            ingest(spark, cfg, changelog_df=events)
+    ingest(spark, cfg, changelog_df=events)
+    lake = LakeTable(spark, cfg.lake_path)
+    _assert_lake_exact(lake, _expected_rows(lake, events, cfg), events, 8)
+
+
+FAULT_PARTITIONS = 4
+# an uncrashed run over 4 epochs with compact_every=2 commits 7 times:
+# create (v1), then twice two epoch deltas and a compaction
+FAULT_COMMITS = 7
+
+
+@pytest.fixture(scope="module")
+def small_events(spark):
+    df = wal.changelog(
+        spark, 800, n_urls=60, epoch_size=200, num_partitions=FAULT_PARTITIONS
+    ).cache()
+    df.count()
+    return df
+
+
+@pytest.fixture(scope="module")
+def uncrashed(spark, small_events, tmp_path_factory):
+    """(rows of an uncrashed lake, rows of the verify fold), by url."""
+    cfg = make_cfg(tmp_path_factory.mktemp("uncrashed"), num_partitions=FAULT_PARTITIONS)
+    links = []
+    link = os.link
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(os, "link", lambda src, dst: links.append(dst) or link(src, dst))
+        ingest(spark, cfg, changelog_df=small_events, compact_every=2)
+    assert len(links) == FAULT_COMMITS
+    lake = LakeTable(spark, cfg.lake_path)
+    return lake.read().orderBy("url").collect(), _expected_rows(lake, small_events, cfg)
+
+
+@pytest.mark.parametrize("k", range(1, FAULT_COMMITS + 1))
+@pytest.mark.parametrize("point", ["link", "hint"])
+def test_commit_fault_matrix_resumes_exactly(
+    spark, small_events, uncrashed, tmp_path, monkeypatch, point, k
+):
+    """Crash each commit of an ingest run (create, epoch deltas and
+    compactions) at its link or at its hint write, then rerun ingest:
+    the resumed lake reads row for row as the uncrashed lake and the
+    verify fold, and no commit key is applied twice."""
+    cfg = make_cfg(tmp_path, num_partitions=FAULT_PARTITIONS)
+    with monkeypatch.context() as m:
+        _crash_commit(m, point, k)
+        with pytest.raises(OSError, match="injected crash"):
+            ingest(spark, cfg, changelog_df=small_events, compact_every=2)
+    ingest(spark, cfg, changelog_df=small_events, compact_every=2)
+    uncrashed_rows, expected_rows = uncrashed
+    assert uncrashed_rows == expected_rows
+    _assert_lake_exact(
+        LakeTable(spark, cfg.lake_path), uncrashed_rows, small_events, FAULT_PARTITIONS
+    )
+
+
+def test_vacuum_survives_swap_crash_orphan(spark, events, tmp_path, monkeypatch):
+    """Two runs that each crash between a commit's link and its hint
+    write leave the CURRENT hint two versions behind the head. vacuum
+    keeps the head (the last linked version, not the hinted one), and
+    the table reads it."""
     cfg = make_cfg(tmp_path)
     ingest(spark, cfg, changelog_df=events.where(F.col("batch_epoch") < 3))
+    upto5 = events.where(F.col("batch_epoch") < 5)
+    for _ in range(2):  # each run dies after linking its first commit
+        with monkeypatch.context() as m:
+            _crash_commit(m, "hint", 1)
+            with pytest.raises(OSError, match="injected crash"):
+                ingest(spark, cfg, changelog_df=upto5)
     lake = LakeTable(spark, cfg.lake_path)
-    cur_v = lake.manifest().version
-    before = {tuple(r) for r in lake.read().collect()}
-    # forge the crash: an orphan manifest at cur_v+1 referencing a
-    # compact-shaped rewrite (no files in common with CURRENT), with
-    # CURRENT still pointing at cur_v
-    mdir = os.path.join(str(tmp_path / "lake"), "_manifests")
-    with open(os.path.join(mdir, f"v{cur_v:08d}.json")) as f:
-        mf = json.load(f)
-    mf["version"] = cur_v + 1
-    mf["base"] = {"0": []}
-    mf["deltas"] = {}
-    with open(os.path.join(mdir, f"v{cur_v + 1:08d}.json"), "w") as f:
-        json.dump(mf, f)
+    head = lake.versions()[-1]
+    with open(os.path.join(cfg.lake_path, "_manifests", "CURRENT")) as f:
+        assert int(f.read()) == head - 2
+    want = _expected_rows(lake, upto5, cfg)
     lake.vacuum(retain_last=1)
-    # the CURRENT-pointed manifest survives and the table still reads
-    assert lake.manifest().version == cur_v
-    assert {tuple(r) for r in lake.read().collect()} == before
-    shutil.rmtree(str(tmp_path / "lake"), ignore_errors=True)
+    assert lake.versions() == [head]
+    _assert_lake_exact(lake, want, upto5, 8)
+
+
+def test_vacuum_crash_before_data_files_resumes(spark, small_events, tmp_path, monkeypatch):
+    """A crash in vacuum after it removed the expired manifests and
+    before it removed their data files: the table still reads the head,
+    and the next vacuum finishes the sweep."""
+    cfg = make_cfg(tmp_path, num_partitions=FAULT_PARTITIONS)
+    ingest(spark, cfg, changelog_df=small_events, compact_every=2)
+    lake = LakeTable(spark, cfg.lake_path)
+    head = lake.manifest().version
+    before = lake.read().orderBy("url").collect()
+    remove = os.remove
+
+    def crash_on_data_file(path, *args, **kwargs):
+        if str(path).endswith(".parquet"):
+            raise OSError("injected crash in vacuum")
+        return remove(path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "remove", crash_on_data_file)
+        with pytest.raises(OSError, match="injected crash"):
+            lake.vacuum(retain_last=1)
+    assert lake.versions() == [head]
+    assert lake.read().orderBy("url").collect() == before
+    assert lake.vacuum(retain_last=1) > 0
+    assert lake.versions() == [head]
+    assert lake.read().orderBy("url").collect() == before

@@ -61,7 +61,7 @@ def test_scan_changes_skips_files_and_matches_full_scan(spark, tmp_path):
     for epoch, lo in enumerate((100, 200, 300)):
         batch = _kvp(spark, [(f"k{epoch}-{i}", "v", lo + i, i, "U")
                              for i in range(5)])
-        lake.append_mor(batch, [f"e{epoch}"])
+        lake.commit_staged_delta(lake.stage_delta(batch), [f"e{epoch}"])
     mf = lake.manifest()
     files = lake._files(mf)
     kept, skipped = lake._prune_by_ts(mf, files, 200, None)
@@ -76,7 +76,8 @@ def test_scan_changes_skips_files_and_matches_full_scan(spark, tmp_path):
                  lake.scan_changes(ts_lower=200, ts_upper=299).collect())
     assert mid == sorted(f"k1-{i}" for i in range(5))
     # tombstones are changes: excluded only on request
-    lake.append_mor(_kvp(spark, [("k1-0", None, 400, 9, "D")]), ["e3"])
+    tombstone = _kvp(spark, [("k1-0", None, 400, 9, "D")])
+    lake.commit_staged_delta(lake.stage_delta(tombstone), ["e3"])
     assert lake.scan_changes(ts_lower=400).count() == 1
     assert lake.scan_changes(ts_lower=400, include_tombstones=False).count() == 0
 
@@ -87,7 +88,8 @@ def test_row_count_bound(spark, tmp_path):
     lake.merge_cow(df, ["e0"])
     assert lake.row_count_bound() == lake.read().count() == 20
     # MoR deltas add duplicate key versions: bound exceeds live rows
-    lake.append_mor(_kvp(spark, [("k0", "v2", 100, 99, "U")]), ["e1"])
+    update = _kvp(spark, [("k0", "v2", 100, 99, "U")])
+    lake.commit_staged_delta(lake.stage_delta(update), ["e1"])
     assert lake.row_count_bound() == 21
     assert lake.read().count() == 20
     lake.compact()

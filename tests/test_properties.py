@@ -156,10 +156,10 @@ def test_lake_folds_agree_with_model(spark, tmp_path_factory, evs, assign):
     mixed = _new_lake(spark, tmp_path_factory, LAKE_SCHEMA)
     for i, b in enumerate(batches):
         df = spark.createDataFrame(b, LAKE_SCHEMA)
-        mor.append_mor(df, [f"b{i}"])
+        mor.commit_staged_delta(mor.stage_delta(df), [f"b{i}"])
         cow.merge_cow(df, [f"b{i}"])
         if i % 2 == 0:
-            mixed.append_mor(df, [f"b{i}"])
+            mixed.commit_staged_delta(mixed.stage_delta(df), [f"b{i}"])
         else:
             parent = mixed.manifest().version
             mixed.merge_cow(df, [f"b{i}"])

@@ -218,7 +218,7 @@ def test_ttl_expiry_read_and_compact(spark, tmp_path):
         spark, str(tmp_path / "lake"), df.schema,
         key_col="key", ts_col="ts", seq_col="seq", num_buckets=4, ttl_col="ttl",
     )
-    lake.append_mor(df, ["e1"])
+    lake.commit_staged_delta(lake.stage_delta(df), ["e1"])
 
     live_early = {r["key"] for r in lake.read(as_of="2024-01-01 00:30:00").collect()}
     assert live_early == {"k1", "k2", "k3"}
@@ -234,19 +234,42 @@ def test_ttl_expiry_read_and_compact(spark, tmp_path):
     assert remaining == {"k2", "k3"}
 
 
-def test_concurrent_writer_fails_loudly(spark, tmp_path):
-    """A second writer racing the manifest swap must FAIL, not silently
-    discard the winner's commit (O_CREAT|O_EXCL version-file lock)."""
+def test_concurrent_writer_fails_loudly(spark, tmp_path, monkeypatch):
+    """A second writer racing a commit must FAIL, not silently discard
+    the winner's commit. The winner commits inside the loser's window:
+    after the loser read the manifest (caught by the head check), or
+    just before the loser's link (caught by the link, which fails if
+    the version file exists). Either way the winner stays the head."""
     import os
 
     df = _kvp(spark, [("k1", "v1", 1, 1, "U")])
     lake = _mk_lake(spark, tmp_path / "lake", df)
     lake.merge_cow(df, ["m1"])
-    v = lake.manifest().version
-    # simulate a concurrent writer that already created the next version
-    open(os.path.join(str(tmp_path / "lake"), "_manifests", f"v{v + 1:08d}.json"), "w").close()
-    with pytest.raises(RuntimeError, match="concurrent commit"):
-        lake.merge_cow(_kvp(spark, [("k2", "v2", 1, 2, "U")]), ["m2"])
+    before = {tuple(r) for r in lake.read().collect()}
+    collect_stats = LakeTable._collect_stats
+
+    def winner_commits_first(self, files, mf):
+        lake._commit(lake.manifest())  # a complete copy of the head
+        return collect_stats(self, files, mf)
+
+    link = os.link
+
+    def winner_links_first(src, dst):
+        mf = lake.manifest()
+        mf.version += 1
+        with open(dst, "w") as f:
+            f.write(mf.to_json())
+        return link(src, dst)
+
+    races = ((LakeTable, "_collect_stats", winner_commits_first), (os, "link", winner_links_first))
+    for target, name, race in races:
+        v = lake.manifest().version
+        with monkeypatch.context() as m:
+            m.setattr(target, name, race)
+            with pytest.raises(RuntimeError, match="concurrent commit"):
+                lake.merge_cow(_kvp(spark, [("k2", "v2", 1, 2, "U")]), ["m2"])
+        assert lake.manifest().version == v + 1
+        assert {tuple(r) for r in lake.read().collect()} == before
 
 
 def test_merge_counter_partial_overlap_raises(spark, tmp_path):

@@ -1,83 +1,13 @@
-"""Structured Streaming replay: final state must equal the batch fold,
-and a checkpointed rerun must not double-apply."""
+"""Structured Streaming jobs over the WAL: windowed activity, the
+stateful LWW change feed and incremental near-dup detection."""
 
 from pyspark.sql import functions as F
 
 from cassandra_data_migrator_spark.config import EngineConfig
-from cassandra_data_migrator_spark.jobs import expected_state
 from cassandra_data_migrator_spark.sources import changelog as wal
-from cassandra_data_migrator_spark.sources.lake import LakeTable
-from cassandra_data_migrator_spark.streaming.replay import stream_ingest, windowed_url_activity
+from cassandra_data_migrator_spark.streaming.replay import windowed_url_activity
 
 N_EVENTS = 3_000
-
-
-def test_stream_ingest_matches_batch_fold(spark, tmp_path):
-    ev = wal.changelog(spark, N_EVENTS, n_urls=200, epoch_size=500, num_partitions=4)
-    wal.write_changelog(ev, str(tmp_path / "wal"))
-    cfg = EngineConfig.from_dict(
-        dict(
-            lake_path=str(tmp_path / "lake"),
-            changelog_path=str(tmp_path / "wal"),
-            num_partitions=4,
-            num_buckets=8,
-        )
-    )
-    stream_ingest(spark, cfg, str(tmp_path / "ckpt"), max_files_per_trigger=2)
-    actual = LakeTable(spark, cfg.lake_path).read()
-    expected = expected_state(ev, cfg)
-    assert actual.exceptAll(expected).count() == 0
-    assert expected.exceptAll(actual).count() == 0
-
-    # rerun with the same checkpoint: no new data => state unchanged
-    v_before = LakeTable(spark, cfg.lake_path).manifest().version
-    stream_ingest(spark, cfg, str(tmp_path / "ckpt"), max_files_per_trigger=2)
-    after = LakeTable(spark, cfg.lake_path).read()
-    assert after.exceptAll(expected).count() == 0
-    assert expected.exceptAll(after).count() == 0
-
-
-def test_stream_resume_without_checkpoint_is_idempotent(spark, tmp_path):
-    """Even with the streaming checkpoint DELETED (worst case: all
-    batches redelivered), the lake's commit keys make re-application a
-    no-op — state equals the batch fold, nothing duplicated."""
-    ev = wal.changelog(spark, N_EVENTS, n_urls=200, epoch_size=500, num_partitions=4)
-    wal.write_changelog(ev, str(tmp_path / "wal"))
-    cfg = EngineConfig.from_dict(
-        dict(
-            lake_path=str(tmp_path / "lake"),
-            changelog_path=str(tmp_path / "wal"),
-            num_partitions=4,
-            num_buckets=8,
-        )
-    )
-    stream_ingest(spark, cfg, str(tmp_path / "ckpt1"), max_files_per_trigger=2)
-    stream_ingest(spark, cfg, str(tmp_path / "ckpt2"), max_files_per_trigger=2)
-    actual = LakeTable(spark, cfg.lake_path).read()
-    expected = expected_state(ev, cfg)
-    assert actual.exceptAll(expected).count() == 0
-    assert expected.exceptAll(actual).count() == 0
-
-
-def test_stream_ingest_applies_origin_filters(spark, tmp_path):
-    """Stream ingest reads the rows batch ingest applies: with a WHERE
-    condition set, the lake equals the filtered verify fold."""
-    ev = wal.changelog(spark, N_EVENTS, n_urls=200, epoch_size=500, num_partitions=4)
-    wal.write_changelog(ev, str(tmp_path / "wal"))
-    cfg = EngineConfig.from_dict(
-        dict(
-            lake_path=str(tmp_path / "lake"),
-            changelog_path=str(tmp_path / "wal"),
-            num_partitions=4,
-            num_buckets=8,
-            where_condition="seq % 3 <> 0",
-        )
-    )
-    stream_ingest(spark, cfg, str(tmp_path / "ckpt"), max_files_per_trigger=2)
-    actual = LakeTable(spark, cfg.lake_path).read()
-    expected = expected_state(ev, cfg)
-    assert actual.exceptAll(expected).count() == 0
-    assert expected.exceptAll(actual).count() == 0
 
 
 def test_windowed_activity_batch_semantics(spark):
