@@ -513,10 +513,14 @@ def small_events(spark):
 def uncrashed(spark, small_events, tmp_path_factory):
     """(rows of an uncrashed lake, rows of the verify fold), by url."""
     cfg = make_cfg(tmp_path_factory.mktemp("uncrashed"), num_partitions=FAULT_PARTITIONS)
-    links = []
-    link = os.link
+    links, link = [], os.link
+
+    def counted_link(src, dst):
+        links.append(dst)
+        return link(src, dst)
+
     with pytest.MonkeyPatch.context() as m:
-        m.setattr(os, "link", lambda src, dst: links.append(dst) or link(src, dst))
+        m.setattr(os, "link", counted_link)
         ingest(spark, cfg, changelog_df=small_events, compact_every=2)
     assert len(links) == FAULT_COMMITS
     lake = LakeTable(spark, cfg.lake_path)
