@@ -1,9 +1,12 @@
 """Benchmark harness: headline queries + CDC replay throughput.
 
 Runs at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]`` and prints two JSON lines: the full result,
+then a short line (every key but ``query_runs_sec``, plus the substrate
+probe's ``probe.cpu_s`` and ``probe.membw_gbps``) that fits in the last
+2,000 characters of stdout, so a reader of the output tail can parse it:
   {"metric": "cdc_events_per_sec", "value": N, "unit": "events/sec",
-   "queries": {name: seconds, ...}, "sf": 0.1}
+   "queries": {name: seconds, ...}, "sf": 0.1, "probe.cpu_s": ..., ...}
 
 The headline metric is the north rule's change-events/sec applied
 end-to-end (WAL generation excluded; ingest = LWW dedup + idempotent
@@ -178,6 +181,14 @@ def headline_queries(spark) -> tuple[dict[str, float], dict[str, list[float]]]:
     return {name: min(ts) for name, ts in spreads.items()}, spreads
 
 
+def report_lines(result: dict, probe: dict) -> list[str]:
+    """The full result line, then the short last line: the result without
+    the per-query spreads, plus the substrate probe."""
+    short = {k: v for k, v in result.items() if k != "query_runs_sec"}
+    short.update({k: round(v, 4) for k, v in probe.items()})
+    return [json.dumps(result), json.dumps(short)]
+
+
 def main() -> int:
     sf = _sf()
     spark = get_spark(
@@ -224,7 +235,10 @@ def main() -> int:
         "cdc_runs_sec": runs,
         "protocol": "best-of-3 (per-query and replay spreads recorded; queries interleaved)",
     }
-    print(json.dumps(result))
+    from perfbench.traced import probe_substrate
+
+    for line in report_lines(result, probe_substrate()):
+        print(line)
     return 0
 
 

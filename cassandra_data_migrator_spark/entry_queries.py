@@ -16,7 +16,9 @@ parquet. Numeric policy for cross-engine hash equality:
 
 from __future__ import annotations
 
+import atexit
 import datetime as dt
+import shutil
 import tempfile
 from collections.abc import Callable
 
@@ -120,11 +122,13 @@ SELECT op, COUNT(*) AS n FROM (
 
 def _replayed_lake(spark: SparkSession, sf_dir: str) -> LakeTable:
     """The events WAL (8 key partitions, 2000-event epochs) replayed by
-    ``jobs.ingest`` into a fresh temp lake."""
+    ``jobs.ingest`` into a fresh temp lake, removed at interpreter exit
+    (the returned frames read it lazily)."""
     ev = events_as_changelog(spark, sf_dir).withColumn(
         "partition", F.pmod(F.xxhash64("url"), F.lit(8)).cast("int")
     ).withColumn("batch_epoch", F.floor(F.col("seq") / F.lit(2000)).cast("long"))
     workdir = tempfile.mkdtemp(prefix="cdm_replay_")
+    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
     cfg = EngineConfig.from_dict(
         dict(lake_path=f"{workdir}/lake", lineage_path="", num_partitions=8, num_buckets=16)
     )

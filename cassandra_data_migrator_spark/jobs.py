@@ -30,7 +30,7 @@ from .lineage import LineageStore
 from .metrics import JobCounter
 from .operators.diff import corrections, diff, diff_counters
 from .operators.guardrail import guardrail_check, guardrail_flags
-from .operators.lww import lww_dedup, lww_dedup_salted, lww_dedup_skinny
+from .operators.lww import is_live, lww_dedup, lww_dedup_salted, lww_dedup_skinny
 from .sources import changelog as wal
 from .sources.lake import LakeTable
 
@@ -75,15 +75,16 @@ def apply_origin_filters(df: DataFrame, cfg: EngineConfig) -> DataFrame:
 
 
 def origin_rows(events: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """The change rows a run applies: the origin filters, then the
-    guardrail skip (oversize rows are SKIPPED, not written). Ingest and
-    the verify fold (``expected_state``) both read through this."""
+    """The change rows every job applies: the origin filters, the
+    guardrail skip (oversize rows are SKIPPED, not written), then the WAL
+    envelope (``partition``, ``batch_epoch``) dropped, after the filters
+    so a WHERE may name it."""
     rows = apply_origin_filters(events, cfg)
     if cfg.guardrail_col_size_kb:
         rows = guardrail_flags(rows, cfg.guardrail_col_size_kb).where(
             F.size("_large_cols") == 0
         ).drop("_large_cols")
-    return rows
+    return rows.drop("partition", "batch_epoch")
 
 
 # --------------------------------------------------------------------- ingest
@@ -97,8 +98,10 @@ def ingest(
     """Replay the WAL epoch-by-epoch into the lake table (Migrate analog).
 
     Each planned epoch's winners land as one merge-on-read delta in one
-    commit; every ``compact_every`` epochs, and once at the end,
-    ``compact()`` folds the deltas into the base.
+    commit. Once every ``compact_every`` applied epochs the pipeline
+    drains (the epoch staged behind commits too) and ``compact()`` folds
+    the deltas into the base: 9 epochs at ``compact_every=8`` commit
+    deltas 0-8, then compact once; the closing ``compact()`` is a no-op.
 
     ``lww_strategy``: 'skinny' (default — winner-seq agg + AQE-broadcast
     semi join; never sorts/shuffles payload bytes, 5x faster at 10^7-row
@@ -171,10 +174,10 @@ def ingest(
     def stage(epoch: int, batch: DataFrame):
         """Filter, fold and write one epoch's delta (no commit)."""
         obs_read, obs_pass = Observation(), Observation()
-        rows = origin_rows(batch.observe(obs_read, F.count(F.lit(1)).alias("read")), cfg)
+        read = (F.count(F.lit(1)).alias("read"), F.max(cfg.seq_col).alias("max_seq"))
+        rows = origin_rows(batch.observe(obs_read, *read), cfg)
         salted = lww_strategy == "auto" and _has_hot_key(rows, cfg)
         rows = rows.observe(obs_pass, F.count(F.lit(1)).alias("passed"))
-        rows = rows.drop("partition", "batch_epoch")
         if salted:
             winners = lww_dedup_salted(rows, cfg.key_col, cfg.ts_col, cfg.seq_col, cfg.salt_buckets)
         else:
@@ -189,7 +192,8 @@ def ingest(
         staged, obs_read, obs_pass, salted = staged_future.result()
         try:
             lake.commit_staged_delta(staged, [f"{p}:{epoch}{scope}" for p in parts])
-            read_n, passed_n = obs_read.get["read"], obs_pass.get["passed"]
+            read, passed_n = obs_read.get, obs_pass.get["passed"]
+            read_n, max_seq = read["read"], read["max_seq"]
             jc = JobCounter()
             jc.add("READ", read_n)
             jc.add("WRITE", passed_n)
@@ -197,6 +201,7 @@ def ingest(
             total.merge(jc)
             if lin and cfg.track_run:
                 lin.record_batch(cfg.run_id, parts, epoch, "PASS", jc.as_dict(),
+                                 watermark_seq=-1 if max_seq is None else max_seq,
                                  prev_run_id=cfg.prev_run_id)
         except Exception:
             if lin and cfg.track_run:
@@ -213,6 +218,8 @@ def ingest(
     # measured residual in the N->4N scaling evidence.
     # Commits stay strictly ordered, so resume/exactly-once semantics
     # are unchanged; a staged-but-uncommitted epoch is an orphan dir.
+    # On failure, shutdown waits for a running stage: nothing writes
+    # into the lake after ingest has raised.
     pool = ThreadPoolExecutor(max_workers=2)
     inflight: deque = deque()  # (epoch, parts, future)
     try:
@@ -230,7 +237,7 @@ def ingest(
         while inflight:
             commit(*inflight.popleft())
     finally:
-        pool.shutdown(wait=False, cancel_futures=True)
+        pool.shutdown(wait=True, cancel_futures=True)
 
     lake.compact()
     if lin and cfg.track_run:
@@ -284,9 +291,7 @@ def _epochs_from_wal_dirs(path: str) -> list[int]:
 def _ensure_lake(spark: SparkSession, cfg: EngineConfig, events: DataFrame) -> LakeTable:
     # the table's shape is the POST-feature schema (constant/extracted
     # columns exist from the first commit; renames/skips applied)
-    base_schema = apply_features(
-        events.drop("partition", "batch_epoch").limit(0), cfg
-    ).schema
+    base_schema = apply_features(origin_rows(events.limit(0), cfg), cfg).schema
     return LakeTable.create(
         spark,
         cfg.lake_path,
@@ -306,11 +311,11 @@ def expected_state(events: DataFrame, cfg: EngineConfig) -> DataFrame:
     declarative fold: per url keep the (warc_ts, seq)-largest event,
     drop it if that winner is a delete. This is the oracle the verify
     phase compares the materialized lake table against."""
-    rows = origin_rows(events, cfg).drop("partition", "batch_epoch")
+    rows = origin_rows(events, cfg)
     folded = apply_features(lww_dedup(rows, cfg.key_col, cfg.ts_col, cfg.seq_col), cfg)
-    # null-safe: NULL-op rows (e.g. corrections) are live, matching
-    # LakeTable.read — asymmetric filters here would report phantom diffs
-    return folded.where(~F.col(cfg.op_col).eqNullSafe(F.lit("D")))
+    # the same live-row rule as LakeTable.read — asymmetric filters here
+    # would report phantom diffs
+    return folded.where(is_live(cfg.op_col))
 
 
 # --------------------------------------------------------------------- validate
@@ -358,7 +363,6 @@ def validate(
         res = lake.merge_cow(
             corrections(d, cfg.key_col, fix),
             [f"autocorrect:{cfg.run_id}:{_uuid.uuid4().hex}"],
-            force=True,
         )
         if res.committed:
             for s in fix:
@@ -377,9 +381,11 @@ def validate(
 def guardrail(
     spark: SparkSession, cfg: EngineConfig, changelog_df: DataFrame | None = None
 ) -> tuple[DataFrame, JobCounter]:
-    """Origin-only large-field screen (GuardrailCheck analog)."""
+    """Origin-only large-field screen (GuardrailCheck analog) of the rows
+    the scan filters pass (no guardrail skip: this job reports them)."""
     events = changelog_df if changelog_df is not None else spark.read.parquet(cfg.changelog_path)
-    offending, jc = guardrail_check(events, cfg.guardrail_col_size_kb or 1)
+    rows = apply_origin_filters(events, cfg)
+    offending, jc = guardrail_check(rows, cfg.guardrail_col_size_kb or 1)
     jc.print_final("GuardrailCheck")
     return offending, jc
 

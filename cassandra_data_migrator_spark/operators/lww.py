@@ -38,6 +38,13 @@ def _order(ts_col: str, seq_col: str, tie_col: str | None = None):
     return F.struct(*[F.col(c) for c in (ts_col, seq_col, tie_col) if c])
 
 
+def is_live(op_col: str = "op"):
+    """The live-row rule: a row is live unless its op is 'D'; a null op
+    (e.g. a correction row) is live. The lake's resolved read, the
+    verify fold and the streaming dedup all filter with this."""
+    return ~F.col(op_col).eqNullSafe(F.lit("D"))
+
+
 def lww_dedup(
     df: DataFrame,
     key_col: str = "url",

@@ -69,7 +69,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.lww import _order, lww_dedup
+from ..functions.transforms import ttl_alive_predicate
+from ..operators.lww import _order, is_live, lww_dedup
 
 BUCKET_COL = "_bucket"
 GLOBAL_DELTA = "__global__"
@@ -128,6 +129,13 @@ class Manifest:
         applied = set(self.applied)
         keys = dict.fromkeys([commit_keys] if isinstance(commit_keys, str) else commit_keys)
         return [k for k in keys if k not in applied], [k for k in keys if k in applied]
+
+    def files(self, buckets: list[int] | None = None) -> list[str]:
+        """The snapshot's data files, relative to the table root: the base
+        files of ``buckets`` (all when None), then every (table-wide) delta."""
+        keys = list(self.base) if buckets is None else [str(b) for b in buckets]
+        deltas = [p for fs in self.deltas.values() for p in fs]
+        return [p for k in keys for p in self.base.get(k, [])] + deltas
 
     @classmethod
     def from_json(cls, s: str) -> "Manifest":
@@ -230,9 +238,7 @@ class LakeTable:
            instead of silently discarding the winner's data files and
            applied keys.
         """
-        referenced = {
-            f for store in (mf.base, mf.deltas) for fs in store.values() for f in fs
-        }
+        referenced = set(mf.files())
         mf.stats = {f: s for f, s in mf.stats.items() if f in referenced}
         head = self._head()
         if head != mf.version:
@@ -288,14 +294,6 @@ class LakeTable:
         return t
 
     # ------------------------------------------------------------- helpers
-    def _files(self, mf: Manifest, buckets: list[int] | None = None) -> list[str]:
-        """Base files of ``buckets`` (all when None), then every delta
-        file: deltas are table-wide, so any of them may hold any key."""
-        keys = list(mf.base) if buckets is None else [str(b) for b in buckets]
-        rels = [p for k in keys for p in mf.base.get(k, [])]
-        rels += [p for fs in mf.deltas.values() for p in fs]
-        return [os.path.join(self.path, p) for p in rels]
-
     def _collect_stats(
         self, files_by_bucket: dict[str, list[str]], mf: Manifest
     ) -> dict[str, dict]:
@@ -347,7 +345,7 @@ class LakeTable:
         kept: list[str] = []
         skipped = 0
         for p in files:
-            st = mf.stats.get(os.path.relpath(p, self.path))
+            st = mf.stats.get(p)
             if st and st.get("min_ts") is not None:
                 try:
                     if (hi is not None and st["min_ts"] > hi) or (
@@ -365,7 +363,7 @@ class LakeTable:
         if not files:
             return self.spark.createDataFrame([], schema)
         # explicit schema => old files yield null for columns added later
-        return self.spark.read.schema(schema).parquet(*files)
+        return self.spark.read.schema(schema).parquet(*[os.path.join(self.path, p) for p in files])
 
     def _evolve_schema(self, mf: Manifest, batch_schema: T.StructType) -> Manifest:
         """Additively widen the table schema with new batch columns."""
@@ -400,6 +398,24 @@ class LakeTable:
             .distinct().collect()
         )
         return mf, batch, affected
+
+    def _fold_buckets(self, mf: Manifest, buckets: list[int], keys: list[str],
+                      batch: DataFrame | None = None, keep=None) -> CommitResult:
+        """Shared body of ``compact`` and ``merge_cow``: fold the base files
+        of ``buckets``, every delta and ``batch`` with ``lww_dedup``, keep
+        the rows matching ``keep``, and rewrite the buckets. A batch row
+        wins an exact ``(ts, seq)`` tie (writetimeIncrement analog,
+        ``WritetimeTTL.java:244``)."""
+        rows = self._read_files(mf, mf.files(buckets))
+        tie = None if batch is None else "_prec"
+        if tie:
+            rows = rows.withColumn(tie, F.lit(0)).unionByName(
+                batch.withColumn(tie, F.lit(1)), allowMissingColumns=True
+            )
+        resolved = lww_dedup(rows, mf.key_col, mf.ts_col, mf.seq_col, tie_col=tie)
+        if keep is not None:
+            resolved = resolved.where(keep)
+        return self._rewrite_buckets(mf, resolved, buckets, keys)
 
     def _rewrite_buckets(
         self, mf: Manifest, resolved: DataFrame, buckets: list[int], keys: list[str]
@@ -439,10 +455,9 @@ class LakeTable:
         return CommitResult(True, mf.version, buckets_rewritten=len(rewritten))
 
     # ------------------------------------------------------------- merge (CoW)
-    def merge_cow(
-        self, batch: DataFrame, commit_keys: list[str] | str, force: bool = False
-    ) -> CommitResult:
-        """LWW-upsert a batch; rewrite affected buckets.
+    def merge_cow(self, batch: DataFrame, commit_keys: list[str] | str) -> CommitResult:
+        """LWW-upsert a batch; rewrite affected buckets. A batch row wins
+        an exact ``(ts, seq)`` tie (validate's autocorrect overwrite).
 
         Iceberg ``MERGE INTO ... WHEN MATCHED UPDATE WHEN NOT MATCHED
         INSERT`` analog of the reference's upsert sink
@@ -462,19 +477,7 @@ class LakeTable:
         mf, batch, affected = self._prepare_merge(mf, batch)
         if any(mf.deltas.values()):
             affected = sorted(set(affected) | {int(b) for b in mf.base})
-        existing = self._read_files(mf, self._files(mf, affected))
-        tie = None
-        if force:
-            # batch wins exact (ts, seq) ties — autocorrect overwrite
-            # (writetimeIncrement analog, WritetimeTTL.java:244)
-            tie = "_prec"
-            existing = existing.withColumn(tie, F.lit(0))
-            batch = batch.withColumn(tie, F.lit(1))
-        merged = lww_dedup(
-            existing.unionByName(batch, allowMissingColumns=True),
-            mf.key_col, mf.ts_col, mf.seq_col, tie_col=tie,
-        )
-        return self._rewrite_buckets(mf, merged, affected, keys)
+        return self._fold_buckets(mf, affected, keys, batch=batch)
 
     # ------------------------------------------------------------- counter merge
     def merge_counter(
@@ -513,7 +516,7 @@ class LakeTable:
             # row versions whose counter values would double-sum
             raise ValueError("merge_counter cannot run while MoR deltas are pending")
         mf, batch, affected = self._prepare_merge(mf, batch)
-        existing = self._read_files(mf, self._files(mf, affected))
+        existing = self._read_files(mf, mf.files(affected))
         both = existing.unionByName(batch, allowMissingColumns=True)
         other_cols = [c for c in both.columns if c not in counter_cols and c != mf.key_col]
         payload = F.struct(*[F.col(c) for c in other_cols])
@@ -586,17 +589,11 @@ class LakeTable:
         mf = self.manifest()
         if not any(mf.deltas.values()):
             return CommitResult(False, mf.version)
-        buckets = sorted(int(b) for b in mf.base)
-        df = self._read_files(mf, self._files(mf, buckets))
-        resolved = lww_dedup(df, mf.key_col, mf.ts_col, mf.seq_col)
+        keep = None
         ttl_col = mf.props.get("ttl_col")
-        if expire_as_of is not None and ttl_col and ttl_col in resolved.columns:
-            from ..functions.transforms import ttl_alive_predicate
-
-            resolved = resolved.where(
-                ttl_alive_predicate(mf.ts_col, ttl_col, expire_as_of)
-            )
-        return self._rewrite_buckets(mf, resolved, buckets, [])
+        if expire_as_of is not None and ttl_col and ttl_col in mf.schema().names:
+            keep = ttl_alive_predicate(mf.ts_col, ttl_col, expire_as_of)
+        return self._fold_buckets(mf, sorted(int(b) for b in mf.base), [], keep=keep)
 
     def vacuum(self, retain_last: int = 1) -> int:
         """Physically delete data files referenced only by manifests
@@ -617,10 +614,7 @@ class LakeTable:
         versions = self.versions()
         keep_files: set[str] = set()
         for v in versions[-retain_last:]:
-            mf = self.manifest(v)
-            for store in (mf.base, mf.deltas):
-                for files in store.values():
-                    keep_files.update(files)
+            keep_files.update(self.manifest(v).files())
         # drop expired manifests BEFORE touching data files: a crash
         # mid-vacuum then leaves only orphan (unreferenced) data files —
         # harmless, reclaimed by the next vacuum — never a readable
@@ -652,7 +646,6 @@ class LakeTable:
     # ------------------------------------------------------------- read
     def read(
         self,
-        include_tombstones: bool = False,
         buckets: list[int] | None = None,
         as_of=None,
         version: int | None = None,
@@ -663,7 +656,7 @@ class LakeTable:
         historical manifest resolves byte-identically — the
         reproducible-training-dataset guarantee; Delta ``VERSION AS OF``
         / Iceberg snapshot-read analog, no reference counterpart).
-        Tombstones ('D' rows) dropped at projection.
+        Tombstones are dropped at projection (``operators.lww.is_live``).
 
         ``buckets``: read only those buckets' base files. Every delta is
         still read, so rows of other buckets' keys may come back too;
@@ -674,16 +667,13 @@ class LakeTable:
         query-time half of USING-TTL expiry; ``compact(expire_as_of=)``
         is the physical reclaim)."""
         mf = self.manifest(version)
-        df = self._read_files(mf, self._files(mf, buckets))
+        df = self._read_files(mf, mf.files(buckets))
         if any(mf.deltas.values()):
             df = lww_dedup(df, mf.key_col, mf.ts_col, mf.seq_col)
-        if not include_tombstones and mf.op_col in df.columns:
-            # null op (e.g. correction rows) is live, not a tombstone
-            df = df.where(~F.col(mf.op_col).eqNullSafe(F.lit("D")))
+        if mf.op_col in df.columns:
+            df = df.where(is_live(mf.op_col))
         ttl_col = mf.props.get("ttl_col")
         if as_of is not None and ttl_col and ttl_col in df.columns:
-            from ..functions.transforms import ttl_alive_predicate
-
             df = df.where(ttl_alive_predicate(mf.ts_col, ttl_col, as_of))
         return df
 
@@ -691,7 +681,6 @@ class LakeTable:
         self,
         ts_lower=None,
         ts_upper=None,
-        include_tombstones: bool = True,
         version: int | None = None,
     ) -> DataFrame:
         """Raw (unresolved) scan of the snapshot's committed row
@@ -706,16 +695,14 @@ class LakeTable:
         Unresolved by design: LWW resolution needs every version of a
         key, so a resolved read could not skip files — and a change
         consumer wants every committed version in the window anyway.
-        Tombstones are included by default (a delete IS a change)."""
+        Tombstones are always included (a delete IS a change)."""
         mf = self.manifest(version)
-        kept, _ = self._prune_by_ts(mf, self._files(mf), ts_lower, ts_upper)
+        kept, _ = self._prune_by_ts(mf, mf.files(), ts_lower, ts_upper)
         df = self._read_files(mf, kept)
         if ts_lower is not None:
             df = df.where(F.col(mf.ts_col) >= F.lit(ts_lower))
         if ts_upper is not None:
             df = df.where(F.col(mf.ts_col) <= F.lit(ts_upper))
-        if not include_tombstones and mf.op_col in df.columns:
-            df = df.where(~F.col(mf.op_col).eqNullSafe(F.lit("D")))
         return df
 
     def row_count_bound(self, version: int | None = None) -> int | None:
@@ -727,13 +714,11 @@ class LakeTable:
         collection."""
         mf = self.manifest(version)
         total = 0
-        for store in (mf.base, mf.deltas):
-            for fs in store.values():
-                for rel in fs:
-                    st = mf.stats.get(rel)
-                    if st is None:
-                        return None
-                    total += st["rows"]
+        for rel in mf.files():
+            st = mf.stats.get(rel)
+            if st is None:
+                return None
+            total += st["rows"]
         return total
 
     def lookup(self, keys: list, as_of=None) -> DataFrame:

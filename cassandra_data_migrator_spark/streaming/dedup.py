@@ -5,7 +5,8 @@ pairs one arriving epoch against the accumulated signature index; this
 module runs the same shape continuously: tail the WAL as a streaming
 file source, and per micro-batch
 
-1. LWW-collapse the batch to one live row per key (deletes dropped),
+1. read the batch through ``jobs.origin_rows`` (the run's filters) and
+   LWW-collapse it to one live row per key (deletes dropped),
 2. MinHash-sign the batch's documents (map-side, zero shuffle),
 3. emit candidate pairs against the signatures of every EARLIER batch
    (broadcast left-semi bucket prune — the index is never re-paired
@@ -13,9 +14,10 @@ file source, and per micro-batch
 4. append the batch's signatures to the index.
 
 Idempotent without a transactional sink: both outputs are written
-with dynamic partition overwrite into a ``batch_id=`` partition, so a
-foreachBatch retry or a rerun with the same checkpoint rewrites the
-same partitions byte-identically instead of duplicating. ``batch_id``
+with dynamic partition overwrite into a ``batch_id=`` partition
+(``replay.write_batch``), so a foreachBatch retry or a rerun with the
+same checkpoint rewrites the same partitions byte-identically instead
+of duplicating. ``batch_id``
 is stable only together with the checkpoint: after a lost checkpoint
 the micro-batches are cut afresh, and the outputs are not idempotent.
 The index read filters ``batch_id < current`` (partition-pruned), so a
@@ -37,9 +39,10 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
+from ..jobs import origin_rows
 from ..operators import dedup
-from ..operators.lww import lww_dedup_skinny
-from .replay import drain_wal
+from ..operators.lww import is_live, lww_dedup_skinny
+from .replay import drain_wal, write_batch
 
 
 def stream_dedup(
@@ -63,15 +66,8 @@ def stream_dedup(
     def apply_batch(batch, batch_id: int) -> None:
         s = batch.sparkSession
         live = lww_dedup_skinny(
-            batch.drop("partition", "batch_epoch"),
-            cfg.key_col, cfg.ts_col, cfg.seq_col,
-        )
-        # NULL-op rows are live (same null-safe definition as the
-        # lake/expected_state live-row filter)
-        live = live.where(
-            (F.col(cfg.op_col).isNull() | (F.col(cfg.op_col) != "D"))
-            & F.col("text").isNotNull()
-        )
+            origin_rows(batch, cfg), cfg.key_col, cfg.ts_col, cfg.seq_col
+        ).where(is_live(cfg.op_col) & F.col("text").isNotNull())
         new_sig = dedup.minhash_signature(
             live, "text", cfg.key_col, num_hashes=num_hashes, hash_mode="fast"
         )
@@ -101,13 +97,7 @@ def stream_dedup(
                 num_hashes=num_hashes, bands=bands,
                 max_bucket_size=max_bucket_size,
             )
-        for df, out in ((pairs, pairs_dir), (new_sig, index_dir)):
-            (
-                df.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(out)
-            )
+        write_batch(pairs, batch_id, pairs_dir)
+        write_batch(new_sig, batch_id, index_dir)
 
     return drain_wal(spark, cfg, checkpoint_dir, apply_batch, max_files_per_trigger, timeout_sec)

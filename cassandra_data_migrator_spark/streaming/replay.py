@@ -8,7 +8,8 @@ holds what the streaming jobs (``streaming.dedup``,
 ``drain_wal``, which tails the same epoch-partitioned WAL directory as
 a streaming file source and hands each micro-batch to ``foreachBatch``.
 Spark's checkpoint gives at-least-once foreachBatch invocations whose
-``batch_id`` is stable only together with that checkpoint.
+``batch_id`` is stable only together with that checkpoint. Both jobs
+write their ``batch_id=`` outputs through ``write_batch``.
 
 Also provides a watermarked windowed aggregation over the stream
 (late-data-tolerant url activity counts) to cover the
@@ -71,6 +72,20 @@ def drain_wal(
         q.stop()
         q.awaitTermination()
     return q
+
+
+def write_batch(df: DataFrame, batch_id: int, out_dir: str) -> None:
+    """Write one micro-batch's output into the ``batch_id=`` partition
+    of ``out_dir`` with dynamic partition overwrite: a foreachBatch
+    retry or a checkpointed rerun rewrites that partition instead of
+    duplicating it."""
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(out_dir)
+    )
 
 
 def windowed_url_activity(

@@ -20,11 +20,11 @@ work is a vectorized idxmax, not a row loop.
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Callable, Iterator, Optional, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -196,7 +196,8 @@ def stream_feed(
     state_ttl_ms: int | None = None,
     reseed: ReseedFn | None = None,
 ):
-    """Materialize the LWW change feed: tail the WAL, keep the per-key
+    """Materialize the LWW change feed: tail the WAL, read it through
+    ``jobs.origin_rows`` (the run's filters), keep the per-key
     winner in streaming state, and write each micro-batch's CHANGED
     winners into a ``batch_id=`` partition of ``feed_dir`` — the
     change-data-feed table downstream incremental consumers read
@@ -204,9 +205,9 @@ def stream_feed(
     per key across partitions).
 
     Idempotent without a transactional sink: dynamic partition
-    overwrite on ``batch_id`` — a foreachBatch retry or a checkpointed
-    rerun rewrites the same partition byte-identically instead of
-    duplicating (as in ``streaming/dedup.py``). ``batch_id`` is stable
+    overwrite on ``batch_id`` (``replay.write_batch``) — a foreachBatch
+    retry or a checkpointed rerun rewrites the same partition
+    byte-identically instead of duplicating. ``batch_id`` is stable
     only together with the checkpoint, so this does not hold after a
     lost checkpoint. Trigger.AvailableNow drains what exists then
     stops; rerunning with the checkpoint emits nothing new.
@@ -215,25 +216,16 @@ def stream_feed(
     :func:`stateful_lww_updates` — NOTE processing-time eviction never
     fires under AvailableNow; use event mode (the default) here.
     """
-    from .replay import drain_wal
+    from ..jobs import origin_rows
+    from .replay import drain_wal, write_batch
 
     def updates(events: DataFrame) -> DataFrame:
         return stateful_lww_updates(
-            events.drop("partition", "batch_epoch"),
-            cfg.key_col, cfg.ts_col, cfg.seq_col,
+            origin_rows(events, cfg), cfg.key_col, cfg.ts_col, cfg.seq_col,
             state_ttl_ms=state_ttl_ms, reseed=reseed,
         )
 
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        (
-            batch.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(feed_dir)
-        )
-
     return drain_wal(
-        spark, cfg, checkpoint_dir, apply_batch, max_files_per_trigger, timeout_sec,
-        shape=updates, output_mode="update",
+        spark, cfg, checkpoint_dir, partial(write_batch, out_dir=feed_dir),
+        max_files_per_trigger, timeout_sec, shape=updates, output_mode="update",
     )

@@ -4,12 +4,15 @@ final state + counters)."""
 
 import dataclasses
 import os
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from cassandra_data_migrator_spark.config import EngineConfig
 from cassandra_data_migrator_spark.jobs import expected_state, ingest, validate
+from cassandra_data_migrator_spark.lineage import LineageStore
 from cassandra_data_migrator_spark.operators.diff import STATUS_COL
 from cassandra_data_migrator_spark.sources import changelog as wal
 from cassandra_data_migrator_spark.sources.lake import LakeTable
@@ -71,6 +74,17 @@ def test_ingest_matches_expected_fold(spark, events, tmp_path, where):
     assert expected.exceptAll(actual).count() == 0
     # winners whose final op is delete are gone
     assert actual.where(F.col("op") == "D").count() == 0
+
+
+def test_lineage_watermark_is_epoch_max_seq(spark, events, tmp_path):
+    """Each PASS lineage row carries its epoch's applied-offset
+    watermark: the largest seq the epoch read."""
+    cfg = make_cfg(tmp_path)
+    ingest(spark, cfg, changelog_df=events)
+    got = LineageStore(spark, cfg.lineage_path).details().where("status = 'PASS'")
+    got = got.select("batch_epoch", "watermark_seq").distinct().collect()
+    want = events.groupBy("batch_epoch").agg(F.max("seq")).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
 def test_validate_green(spark, events, tmp_path):
@@ -466,6 +480,26 @@ def _crash_commit(m, point: str, k: int) -> None:
     m.setattr(os, name, crashing)
 
 
+def _crash_stage(m, point: str, k: int) -> None:
+    """Make the k-th ``stage_delta`` call crash: 'stage' raises before
+    it writes anything; 'staged' raises after its data write finished,
+    so that epoch's files are written and never committed."""
+    real, calls, lock = LakeTable.stage_delta, [], threading.Lock()
+
+    def crashing(self, batch):
+        with lock:
+            calls.append(batch)
+            n = len(calls)
+        if n == k and point == "stage":
+            raise OSError(f"injected crash in stage {k}")
+        staged = real(self, batch)
+        if n == k:
+            raise OSError(f"injected crash after the data write of stage {k}")
+        return staged
+
+    m.setattr(LakeTable, "stage_delta", crashing)
+
+
 def _assert_lake_exact(lake, want_rows, events, num_partitions):
     """Lake rows equal ``want_rows`` (sorted by url) and every
     partition:epoch key is applied exactly once."""
@@ -497,13 +531,18 @@ def test_crash_between_link_and_hint_resumes(spark, events, tmp_path, monkeypatc
 FAULT_PARTITIONS = 4
 # an uncrashed run over 4 epochs with compact_every=2 commits 7 times:
 # create (v1), then twice two epoch deltas and a compaction
-FAULT_COMMITS = 7
+FAULT_EPOCHS, FAULT_COMMITS = 4, 7
+# (point, k): the k-th commit crashes at its link or hint write, or the
+# k-th epoch stage crashes before or after its data write
+FAULT_POINTS = [(p, k) for p in ("link", "hint") for k in range(1, FAULT_COMMITS + 1)] + [
+    (p, k) for p in ("stage", "staged") for k in range(1, FAULT_EPOCHS + 1)
+]
 
 
 @pytest.fixture(scope="module")
 def small_events(spark):
     df = wal.changelog(
-        spark, 800, n_urls=60, epoch_size=200, num_partitions=FAULT_PARTITIONS
+        spark, 800, n_urls=60, epoch_size=800 // FAULT_EPOCHS, num_partitions=FAULT_PARTITIONS
     ).cache()
     df.count()
     return df
@@ -527,26 +566,71 @@ def uncrashed(spark, small_events, tmp_path_factory):
     return lake.read().orderBy("url").collect(), _expected_rows(lake, small_events, cfg)
 
 
-@pytest.mark.parametrize("k", range(1, FAULT_COMMITS + 1))
-@pytest.mark.parametrize("point", ["link", "hint"])
+@pytest.mark.parametrize("point,k", FAULT_POINTS)
 def test_commit_fault_matrix_resumes_exactly(
     spark, small_events, uncrashed, tmp_path, monkeypatch, point, k
 ):
     """Crash each commit of an ingest run (create, epoch deltas and
-    compactions) at its link or at its hint write, then rerun ingest:
-    the resumed lake reads row for row as the uncrashed lake and the
-    verify fold, and no commit key is applied twice."""
+    compactions) at its link or at its hint write, or each epoch's
+    stage before or after its data write, then rerun ingest: the resumed
+    lake reads row for row as the uncrashed lake and the verify fold,
+    and no commit key is applied twice. ``vacuum(retain_last=1)`` then
+    leaves no data file outside the head snapshot: orphan staged
+    commit dirs are reclaimed."""
     cfg = make_cfg(tmp_path, num_partitions=FAULT_PARTITIONS)
     with monkeypatch.context() as m:
-        _crash_commit(m, point, k)
+        (_crash_stage if point.startswith("stage") else _crash_commit)(m, point, k)
         with pytest.raises(OSError, match="injected crash"):
             ingest(spark, cfg, changelog_df=small_events, compact_every=2)
     ingest(spark, cfg, changelog_df=small_events, compact_every=2)
     uncrashed_rows, expected_rows = uncrashed
     assert uncrashed_rows == expected_rows
-    _assert_lake_exact(
-        LakeTable(spark, cfg.lake_path), uncrashed_rows, small_events, FAULT_PARTITIONS
-    )
+    lake = LakeTable(spark, cfg.lake_path)
+    _assert_lake_exact(lake, uncrashed_rows, small_events, FAULT_PARTITIONS)
+    lake.vacuum(retain_last=1)
+    _assert_lake_exact(lake, uncrashed_rows, small_events, FAULT_PARTITIONS)
+    on_disk = {
+        os.path.relpath(os.path.join(d, f), cfg.lake_path)
+        for d, _, fs in os.walk(os.path.join(cfg.lake_path, "data"))
+        for f in fs if f.endswith(".parquet")
+    }
+    assert on_disk == set(lake.manifest().files())
+
+
+def test_failed_ingest_returns_after_staging_stops(spark, events, tmp_path, monkeypatch):
+    """Epoch 0's stage fails while epoch 1's stage is still running:
+    ingest raises only after that stage has finished, so no stage
+    writes into the lake after ingest has raised."""
+    cfg = make_cfg(tmp_path)
+    real, lock, other_started = LakeTable.stage_delta, threading.Lock(), threading.Event()
+    running, finished = [0], []
+
+    def failing_then_slow(self, batch):
+        if batch.agg(F.min("seq")).first()[0] // EPOCH == 0:
+            other_started.wait(60)  # fail while the next stage is under way
+            raise RuntimeError("injected stage failure")
+        with lock:
+            running[0] += 1
+        other_started.set()
+        time.sleep(2)
+        try:
+            return real(self, batch)
+        finally:
+            with lock:
+                running[0] -= 1
+                finished.append(time.monotonic())
+
+    with monkeypatch.context() as m:
+        m.setattr(LakeTable, "stage_delta", failing_then_slow)
+        with pytest.raises(RuntimeError, match="injected stage failure"):
+            ingest(spark, cfg, changelog_df=events)
+        raised_at = time.monotonic()
+        deadline = raised_at + 60
+        while running[0] and time.monotonic() < deadline:  # let a leftover stage end
+            time.sleep(0.1)
+    assert finished and not running[0]
+    assert max(finished) <= raised_at
+
 
 
 def test_vacuum_survives_swap_crash_orphan(spark, events, tmp_path, monkeypatch):

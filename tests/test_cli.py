@@ -153,9 +153,9 @@ def test_cli_properties_flag(spark, workdir, tmp_path):
     assert landed.where("seq % 2 = 1").count() == 0
 
 
-def test_cli_where_and_guardrail_filters(spark, workdir, tmp_path):
-    # a WHERE condition plus a guardrail cap must reduce what lands in
-    # the lake vs an unfiltered ingest of the same WAL
+def test_cli_where_and_guardrail_filters(spark, workdir, tmp_path, capsys):
+    """The run filters the CLI accepts apply in every job that reads the
+    WAL: ingest (WHERE plus guardrail cap), feed, dedup and guardrail."""
     lake2 = str(tmp_path / "lake2")
     assert jobs.main([
         "ingest", "--changelog", workdir["wal"], "--lake", lake2,
@@ -167,6 +167,28 @@ def test_cli_where_and_guardrail_filters(spark, workdir, tmp_path):
     filtered = LakeTable(spark, lake2).read()
     assert filtered.count() > 0
     assert filtered.where("seq % 2 = 1").count() == 0
+
+    def urls(out_dir):
+        return {r[0] for r in spark.read.parquet(out_dir).select("url").collect()}
+
+    sevens = ["--changelog", workdir["wal"], "--where", "url LIKE '%7'"]
+    feed = str(tmp_path / "feed")
+    assert jobs.main(["feed", *sevens, "--feed", feed,
+                      "--checkpoint", str(tmp_path / "fck")]) == 0
+    got = urls(feed)
+    assert got and all(u.endswith("7") for u in got)
+    idx = str(tmp_path / "idx")
+    assert jobs.main(["dedup", *sevens, "--index", idx, "--pairs", str(tmp_path / "prs"),
+                      "--checkpoint", str(tmp_path / "dck")]) == 0
+    got = urls(idx)
+    assert got and all(u.endswith("7") for u in got)
+
+    # guardrail screens (READ) exactly the rows the WHERE passes
+    capsys.readouterr()
+    assert jobs.main(["guardrail", "--changelog", workdir["wal"],
+                      "--where", "seq % 2 = 0"]) == 0
+    even = spark.read.parquet(workdir["wal"]).where("seq % 2 = 0").count()
+    assert f"Final Read Record Count: {even}\n" in capsys.readouterr().out
 
 
 def test_cli_dedup_job(spark, workdir, tmp_path):

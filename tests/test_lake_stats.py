@@ -50,8 +50,7 @@ def test_stats_collected_on_commit_and_pruned_to_live_files(spark, tmp_path):
     # a rewriting commit drops stats entries for the replaced files
     lake.merge_cow(_kvp(spark, [("k1", "v9", 30, 3, "U")]), ["e1"])
     mf2 = lake.manifest()
-    live = {f for store in (mf2.base, mf2.deltas) for fs in store.values() for f in fs}
-    assert set(mf2.stats) == live
+    assert set(mf2.stats) == set(mf2.files())
 
 
 def test_scan_changes_skips_files_and_matches_full_scan(spark, tmp_path):
@@ -63,7 +62,7 @@ def test_scan_changes_skips_files_and_matches_full_scan(spark, tmp_path):
                              for i in range(5)])
         lake.commit_staged_delta(lake.stage_delta(batch), [f"e{epoch}"])
     mf = lake.manifest()
-    files = lake._files(mf)
+    files = mf.files()
     kept, skipped = lake._prune_by_ts(mf, files, 200, None)
     assert skipped >= 1 and len(kept) < len(files)
     got = sorted(r["key"] for r in lake.scan_changes(ts_lower=200).collect())
@@ -75,11 +74,10 @@ def test_scan_changes_skips_files_and_matches_full_scan(spark, tmp_path):
     mid = sorted(r["key"] for r in
                  lake.scan_changes(ts_lower=200, ts_upper=299).collect())
     assert mid == sorted(f"k1-{i}" for i in range(5))
-    # tombstones are changes: excluded only on request
+    # tombstones are changes
     tombstone = _kvp(spark, [("k1-0", None, 400, 9, "D")])
     lake.commit_staged_delta(lake.stage_delta(tombstone), ["e3"])
     assert lake.scan_changes(ts_lower=400).count() == 1
-    assert lake.scan_changes(ts_lower=400, include_tombstones=False).count() == 0
 
 
 def test_row_count_bound(spark, tmp_path):
@@ -111,7 +109,7 @@ def test_stats_backward_compat_with_statless_manifest(spark, tmp_path):
         f.write(json.dumps(d))
     # pruning keeps everything; the bound is honestly unknown; reads work
     mf2 = lake.manifest()
-    files = lake._files(mf2)
+    files = mf2.files()
     kept, skipped = lake._prune_by_ts(mf2, files, 10_000, None)
     assert kept == files and skipped == 0
     assert lake.row_count_bound() is None

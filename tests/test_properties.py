@@ -176,14 +176,14 @@ def test_lake_folds_agree_with_model(spark, tmp_path_factory, evs, assign):
 @given(events_strategy, st.sets(st.sampled_from(["k1", "k2", "k3"])))
 @LAKE_SETTINGS
 def test_lake_force_merge_batch_wins_exact_ties(spark, tmp_path_factory, evs, forced):
-    """merge_cow(force=True): a batch row with exactly the stored
-    winner's (ts, seq) replaces it; keys outside the batch keep theirs."""
+    """merge_cow: a batch row with exactly the stored winner's
+    (ts, seq) replaces it; keys outside the batch keep theirs."""
     rows = _event_rows(evs)
     lake = _new_lake(spark, tmp_path_factory, LAKE_SCHEMA)
     lake.merge_cow(spark.createDataFrame(rows, LAKE_SCHEMA), ["seed"])
     winners = _reference_lww(rows)
     ties = [(k, ts, seq, p + "!") for k, ts, seq, p in winners if k in forced]
-    lake.merge_cow(spark.createDataFrame(ties, LAKE_SCHEMA), ["fix"], force=True)
+    lake.merge_cow(spark.createDataFrame(ties, LAKE_SCHEMA), ["fix"])
     expected = {w for w in winners if w[0] not in forced} | set(ties)
     assert _snapshot(lake) == expected
 

@@ -48,7 +48,7 @@ def test_autocorrect_kvp(spark, tmp_path):
     assert jc.get("MISSING") == 1 and jc.get("MISMATCH") == 1 and jc.get("VALID") == 1
     from cassandra_data_migrator_spark.operators.diff import corrections
 
-    lake.merge_cow(corrections(d, "key"), ["fix"], force=True)
+    lake.merge_cow(corrections(d, "key"), ["fix"])
     d2 = diff(origin, lake.read(), "key", ["value", "ts", "seq", "op"])
     assert diff_counters(d2).get("VALID") == 3
 
@@ -228,9 +228,9 @@ def test_ttl_expiry_read_and_compact(spark, tmp_path):
     assert live_feb == {"k3"}
 
     # physical reclaim: after an expiring compaction the row is gone
-    # even from an unfiltered read
+    # even from the raw (unresolved, unfiltered) scan
     lake.compact(expire_as_of="2024-01-05 00:00:00")
-    remaining = {r["key"] for r in lake.read(include_tombstones=True).collect()}
+    remaining = {r["key"] for r in lake.scan_changes().collect()}
     assert remaining == {"k2", "k3"}
 
 
