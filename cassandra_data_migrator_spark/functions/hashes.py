@@ -1,7 +1,8 @@
 """Hash primitives for dedup / fingerprinting, in two flavors.
 
 * **fast** — ``xxhash64`` (JVM-side, whole-stage codegen). The scale
-  path: use for 100 TB runs.
+  path: use for 100 TB runs. :func:`xxhash64_py` is its driver-side
+  mirror, for hashing a few Python values without a Spark job.
 * **portable** — a polynomial rolling hash over characters, built only
   from arithmetic + ``ascii``/``substring``/fold primitives that Spark
   SQL and DuckDB evaluate identically. Used by the oracle-checked
@@ -16,8 +17,11 @@ constants below; signature_i(doc) = min over shingles.
 
 from __future__ import annotations
 
+import struct
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 P_MOD = 1_000_000_007
 
@@ -33,6 +37,73 @@ def fast_hash(col: Column | str) -> Column:
     """Non-negative 63-bit xxhash64 — the production hash."""
     c = F.col(col) if isinstance(col, str) else col
     return F.abs(F.xxhash64(c))
+
+
+_M64 = (1 << 64) - 1
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+_SPARK_SEED = 42  # the seed of Spark's xxhash64
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def xxh64(data: bytes, seed: int) -> int:
+    """Unsigned XXH64 of ``data`` (the reference algorithm, which Spark's
+    ``XXH64.hashUnsafeBytes`` implements)."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed & _M64, (seed - _P1) & _M64]
+        while i + 32 <= n:
+            v = [_round(a, lane) for a, lane in zip(v, struct.unpack_from("<4Q", data, i))]
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for a in v:
+            h = ((h ^ _round(0, a)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h = (_rotl(h ^ _round(0, struct.unpack_from("<Q", data, i)[0]), 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h = (_rotl(h ^ (struct.unpack_from("<I", data, i)[0] * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h = _rotl(h ^ (b * _P5 & _M64), 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def xxhash64_py(value, data_type: T.DataType) -> int:
+    """Spark's ``xxhash64(value)`` (seed 42, signed 64-bit) of one value
+    of ``data_type``, evaluated in Python: the driver mirror of
+    :func:`fast_hash`'s ``F.xxhash64``, the way :func:`portable_hash_py`
+    mirrors :func:`portable_hash_expr`. Strings hash their UTF-8 bytes;
+    byte/short/int values hash as 4 little-endian bytes (Spark
+    ``hashInt``), longs as 8 (``hashLong``); null returns the seed, as
+    Spark does. Any other type raises ``TypeError``."""
+    if value is None:
+        return _SPARK_SEED
+    if isinstance(data_type, T.StringType):
+        data = value.encode("utf-8")
+    elif isinstance(data_type, (T.ByteType, T.ShortType, T.IntegerType)):
+        data = struct.pack("<i", value)
+    elif isinstance(data_type, T.LongType):
+        data = struct.pack("<q", value)
+    else:
+        raise TypeError(f"xxhash64_py: unsupported key type {data_type.simpleString()}")
+    h = xxh64(data, _SPARK_SEED)
+    return h - (1 << 64) if h >> 63 else h
 
 
 # --------------------------------------------------------------- portable

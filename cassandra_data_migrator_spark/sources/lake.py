@@ -25,7 +25,9 @@ engine needs, in the same shape Iceberg provides it:
   * **hash bucketing** — rows are bucketed by ``xxhash64(key) % N``
     (Iceberg ``bucket(N, url)`` analog; CDM's token-range partitioning,
     ``job/SplitPartitions.java:41-76``). Upserts only rewrite affected
-    buckets.
+    buckets. ``bucket_expr`` computes the bucket of a column in Spark;
+    ``bucket_of`` is its driver mirror for Python values, so a lookup
+    finds its buckets without a Spark job.
   * **additive schema evolution** — the manifest stores the table schema;
     merging a batch with new columns widens it, and old files read
     through the widened schema yield nulls for the new columns (CDM's
@@ -69,6 +71,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.hashes import xxhash64_py
 from ..functions.transforms import ttl_alive_predicate
 from ..operators.lww import _order, is_live, lww_dedup
 
@@ -98,8 +101,16 @@ def _norm_stat(v):
 
 
 def bucket_expr(key_col: str, num_buckets: int):
-    """Deterministic bucket id for a key (Iceberg bucket-transform analog)."""
+    """Bucket id of a key column, ``pmod(xxhash64(key), num_buckets)``
+    (Iceberg bucket-transform analog). Data files are bucketed by it;
+    :func:`bucket_of` gives the same id for a driver-side value."""
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_buckets)).cast("int")
+
+
+def bucket_of(value, data_type: T.DataType, num_buckets: int) -> int:
+    """The bucket :func:`bucket_expr` puts ``value`` in, computed on the
+    driver. Python ``%`` equals Spark's ``pmod`` for a positive modulus."""
+    return xxhash64_py(value, data_type) % num_buckets
 
 
 @dataclass
@@ -723,18 +734,18 @@ class LakeTable:
 
     def lookup(self, keys: list, as_of=None) -> DataFrame:
         """Point lookup by primary key (``OriginSelectByPKStatement.java:
-        27-67`` analog): prune the read to the hash buckets the keys
-        fall in, then filter to the keys — touches at most ``len(keys)``
-        buckets' files instead of the whole table."""
+        27-67`` analog): read only the base files of the buckets the keys
+        fall in, then filter to the keys.
+
+        The buckets come from :func:`bucket_of` on the driver, so no
+        Spark job runs before the read, and the hash and the read see one
+        manifest version. Every delta is still read (deltas are
+        table-wide), so a newer or deleted version of a key in a pending
+        delta wins exactly as in :meth:`read`."""
         mf = self.manifest()
-        kdf = self.spark.createDataFrame(
-            [(k,) for k in keys], T.StructType([mf.schema()[mf.key_col]])
-        )
-        buckets = sorted(
-            r[0] for r in
-            kdf.select(bucket_expr(mf.key_col, mf.num_buckets)).distinct().collect()
-        )
-        df = self.read(buckets=buckets, as_of=as_of)
+        key_type = mf.schema()[mf.key_col].dataType
+        buckets = sorted({bucket_of(k, key_type, mf.num_buckets) for k in keys})
+        df = self.read(buckets=buckets, as_of=as_of, version=mf.version)
         return df.where(F.col(mf.key_col).isin(keys))
 
     def applied_keys(self) -> set[str]:
