@@ -2656,8 +2656,8 @@ _SPAN_W = 8
 def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style span-level exact dedup: per-doc retention stats after
     awarding every distinct 8-word span to its first corpus-wide
-    occurrence. Map-side span fanout, one partially aggregated owner
-    fold per span hash, one per-doc rollup — never all-pairs."""
+    occurrence. Map-side span fanout, one hash-partitioned
+    ownership window, one per-doc rollup — never all-pairs."""
     docs = t(spark, sf_dir, "documents")
     return textops.span_dedup(
         docs, "text", "doc_id", span_words=_SPAN_W, hash_mode="portable"

@@ -88,13 +88,15 @@ def xxhash64_py(value, data_type: T.DataType) -> int:
     """Spark's ``xxhash64(value)`` (seed 42, signed 64-bit) of one value
     of ``data_type``, evaluated in Python: the driver mirror of
     :func:`fast_hash`'s ``F.xxhash64``, the way :func:`portable_hash_py`
-    mirrors :func:`portable_hash_expr`. Strings hash their UTF-8 bytes;
-    byte/short/int values hash as 4 little-endian bytes (Spark
-    ``hashInt``), longs as 8 (``hashLong``); null returns the seed, as
-    Spark does. Any other type raises ``TypeError``."""
+    mirrors :func:`portable_hash_expr`. Strings of the default binary
+    collation hash their UTF-8 bytes (Spark hashes the collation key of
+    any other collation, so those raise); byte/short/int values hash as
+    4 little-endian bytes (Spark ``hashInt``), longs as 8
+    (``hashLong``); null returns the seed, as Spark does. Any other type
+    raises ``TypeError``."""
     if value is None:
         return _SPARK_SEED
-    if isinstance(data_type, T.StringType):
+    if data_type == T.StringType():
         data = value.encode("utf-8")
     elif isinstance(data_type, (T.ByteType, T.ShortType, T.IntegerType)):
         data = struct.pack("<i", value)

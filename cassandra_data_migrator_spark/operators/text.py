@@ -484,28 +484,22 @@ def span_dedup(
     documents.
 
     Shape at scale: the span fanout is map-side (sequence + slice HOF,
-    no self-join). Ownership is an owner fold, ``min(struct(id,
-    span_pos))`` per span hash, which partially aggregates before its
-    shuffle, so a hot boilerplate span costs one row per input
-    partition, not one task's sort of all its copies. The per-doc
-    rollup sums each doc's span count (from its token count, no second
-    fanout) and the hashes it owns, so docs that own none get
-    ``n_kept = 0``; it is a second partial-aggregated shuffle. 10^10
-    docs => ~10^12 span rows of a few bytes each, never an all-pairs
-    comparison.
+    no self-join); ownership is ONE shuffle+sort partitioned by the
+    span hash — ~n_tokens/span_words fine-grained naturally-balanced
+    keys, never an all-pairs comparison; the per-doc rollup is a second
+    partial-aggregated shuffle. 10^10 docs => ~10^12 span rows of a few
+    bytes each, far below the pair-explosion a join-based dedup risks.
     """
-    owned = (
-        _span_frame(df, col, id_col, span_words, hash_mode)
-        .groupBy("_h")
-        .agg(F.min(F.struct(id_col, "span_pos")).alias("_o"))
-        .select(F.col(f"_o.{id_col}").alias(id_col), F.lit(0).alias("_s"), F.lit(1).alias("_k"))
+    from pyspark.sql.window import Window
+
+    spans = _span_frame(df, col, id_col, span_words, hash_mode)
+    w_first = Window.partitionBy("_h").orderBy(id_col, "span_pos")
+    owned = spans.withColumn(
+        "_keep", F.row_number().over(w_first) == 1
     )
-    per_doc = _doc_tokens(df, col, id_col).select(
-        id_col, _n_spans(span_words).alias("_s"), F.lit(0).alias("_k")
-    )
-    return per_doc.unionByName(owned).groupBy(id_col).agg(
-        F.sum("_s").cast("long").alias("n_spans"),
-        F.sum("_k").cast("long").alias("n_kept"),
+    return owned.groupBy(id_col).agg(
+        F.count(F.lit(1)).cast("long").alias("n_spans"),
+        F.sum(F.col("_keep").cast("long")).cast("long").alias("n_kept"),
     ).select(
         F.col(id_col),
         "n_spans",
@@ -759,26 +753,20 @@ def winnow_fingerprint(
     ).withColumn("sketch_size", F.size("sketch").cast("long"))
 
 
-def _doc_tokens(df: DataFrame, col: str, id_col: str) -> DataFrame:
-    """(id, _w) token arrays of the docs with at least one token."""
-    return df.select(F.col(id_col), tokens_expr(col).alias("_w")).where(F.size("_w") > 0)
-
-
-def _n_spans(span_words: int) -> Column:
-    """Span count of a ``_w`` token array (the last span may be short)."""
-    return F.expr(f"(size(_w) + {span_words - 1}) div {span_words}")
-
-
 def _span_frame(
     df: DataFrame, col: str, id_col: str, span_words: int, hash_mode: str
 ) -> DataFrame:
     """(id, span_pos, _h) fanout shared by span_dedup/span_novelty."""
     hash_fn = fast_hash if hash_mode == "fast" else portable_hash_expr
-    return _doc_tokens(df, col, id_col).select(
+    toks = df.select(F.col(id_col), tokens_expr(col).alias("_w")).where(
+        F.size("_w") > 0
+    )
+    n_sp = F.expr(f"(size(_w) + {span_words - 1}) div {span_words}")
+    return toks.select(
         F.col(id_col),
         F.posexplode(
             F.transform(
-                F.sequence(F.lit(0), (_n_spans(span_words) - 1).cast("int")),
+                F.sequence(F.lit(0), (n_sp - 1).cast("int")),
                 lambda i: F.array_join(
                     F.slice(F.col("_w"), i * span_words + 1, F.lit(span_words)),
                     " ",

@@ -352,15 +352,11 @@ def main() -> int:
     sections.append((
         "span_dedup — C4-style span ownership, never all-pairs",
         "The span fanout (sequence + slice + posexplode) is map-side; "
-        "ownership is an owner fold, min(struct(doc_id, span_pos)) per "
-        "span hash (a SortAggregate: the buffer is a struct), partially "
-        "aggregated before its shuffle, so a hot "
-        "boilerplate span sends one row per input partition and no "
-        "Window sorts all its copies in one task; the per-doc rollup "
-        "unions each doc's span count with the hashes it owns and is a "
-        "second partial-aggregated shuffle. No join, no pair "
-        "materialization anywhere.",
-        trim(fmt(spark, sd, "simple"), 24),
+        "ownership is ONE shuffle+sort partitioned by the span hash "
+        "(~n_tokens/8 fine-grained naturally-balanced keys); the "
+        "per-doc retention rollup is a second partial-aggregated "
+        "shuffle. No join, no pair materialization anywhere.",
+        trim(fmt(spark, sd, "simple"), 16),
     ))
 
     st = QUERIES["state_diff"](spark, SF)
