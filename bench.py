@@ -172,11 +172,14 @@ def headline_queries(spark) -> tuple[dict[str, float], dict[str, list[float]]]:
     # any single query — same protocol tools/bench_scaling.py already uses.
     # The full per-round spread is returned alongside the minima so
     # round-over-round query deltas are as noise-robust as the headline.
+    # Each query is forced by a noop write, not count(): count() lets the
+    # optimizer prune every column it does not need, and the work that
+    # computes them (span_dedup's ownership window, say) with it.
     spreads: dict[str, list[float]] = {name: [] for name in cases}
     for _round in range(3):
         for name, mk in cases.items():
             t0 = time.time()
-            mk().count()
+            mk().write.format("noop").mode("overwrite").save()
             spreads[name].append(round(time.time() - t0, 3))
     return {name: min(ts) for name, ts in spreads.items()}, spreads
 

@@ -25,7 +25,9 @@ class EngineConfig:
                                       # count (salting tiny epochs costs more than it saves)
 
     # --- batching (micro-batch epochs; CopyJobSession.java:150-218 analog)
-    epoch_size: int = 100_000         # events per batch_epoch
+    epoch_size: int = 100_000         # events per batch_epoch the WAL writer makes, and
+                                      # ingest's group budget: fresh epochs commit together
+                                      # while their rows sum to at most this
 
     # --- LWW semantics (WritetimeTTL.java:235-258, PKFactory.java:106-133)
     key_col: str = "url"

@@ -95,39 +95,54 @@ def ingest(
     compact_every: int = 8,
     lww_strategy: str = "skinny",
 ) -> RunResult:
-    """Replay the WAL epoch-by-epoch into the lake table (Migrate analog).
+    """Replay the WAL into the lake table in groups of epochs (Migrate
+    analog).
 
-    Each planned epoch's winners land as one merge-on-read delta in one
-    commit. Once every ``compact_every`` applied epochs the pipeline
-    drains (the epoch staged behind commits too) and ``compact()`` folds
-    the deltas into the base: 9 epochs at ``compact_every=8`` commit
-    deltas 0-8, then compact once; the closing ``compact()`` is a no-op.
+    Consecutive fresh epochs are planned in groups: an epoch joins the
+    open group while the group's rows (WAL footer counts, or one
+    per-epoch count of a caller-supplied frame) stay within
+    ``cfg.epoch_size`` and the group holds fewer than ``compact_every``
+    epochs (one, when ``compact_every`` is 0). An epoch larger than
+    that budget, and a partially applied epoch, run alone; with
+    ``cfg.epoch_size`` at or below the WAL's epoch size every epoch runs
+    alone. Each group is one scan, one origin filter, one skew probe,
+    one LWW fold, one merge-on-read delta and one commit carrying every
+    ``{p}:{e}`` key of its epochs; counters and lineage rows stay per
+    epoch. A compaction is due when the applied-epoch count crosses a
+    multiple of ``compact_every``: the pipeline drains (the group staged
+    behind commits too) and ``compact()`` folds the deltas into the
+    base. Example: 9 epochs of 800 events at the default budget and
+    ``compact_every=8`` plan as [0-7] and [8]; the commit of [0-7] makes
+    the compaction due, [8] commits behind it, then one compaction; the
+    closing ``compact()`` is a no-op. Per epoch (``epoch_size=800``) the
+    same run commits deltas 0-8, then compacts once.
 
     ``lww_strategy``: 'skinny' (default — winner-seq agg + AQE-broadcast
     semi join; never sorts/shuffles payload bytes, 5x faster at 10^7-row
-    epochs) or 'auto' (per epoch, a cheap key-count aggregation —
+    epochs) or 'auto' (per group, a cheap key-count aggregation —
     column-pruned scan, map-side combine, O(distinct keys) shuffle —
     folds with ``lww_dedup_salted`` when one key exceeds
-    max(cfg.skew_min_rows, rows/num_partitions), else skinny; decisions
-    land in ``RunResult.epochs_salted``).
+    max(cfg.skew_min_rows, rows/num_partitions), else skinny; every
+    epoch of a salted group lands in ``RunResult.epochs_salted``).
     """
     if lww_strategy not in ("skinny", "auto"):
         raise ValueError(f"lww_strategy must be 'skinny' or 'auto', not {lww_strategy!r}")
     # O(epochs) planning (SplitPartitions analog, job/SplitPartitions.java:
-    # 32-76): the epoch list comes from the WAL's ``batch_epoch=`` hive
-    # directories (metadata only — no event rows read) when this job owns
-    # the read; a caller-supplied DataFrame may carry filters the file
-    # listing can't see, so that path falls back to a single-column
-    # distinct (O(epochs) driver rows, never epochs x partitions).
+    # 32-76): the epochs and their row counts come from the WAL's
+    # ``batch_epoch=`` hive directories and parquet footers (metadata
+    # only — no event rows read) when this job owns the read; a
+    # caller-supplied DataFrame may carry filters the file listing can't
+    # see, so that path falls back to a single-column count per epoch
+    # (O(epochs) driver rows, never epochs x partitions).
     # The directories are listed BEFORE the scan builds its file index:
     # an epoch that lands in between is then in the index but not in the
     # plan (the next run picks it up), never planned without its files.
     if changelog_df is None:
-        epochs = _epochs_from_wal_dirs(cfg.changelog_path)
+        epoch_rows = _epochs_from_wal_dirs(cfg.changelog_path)
         events = spark.read.parquet(cfg.changelog_path)
     else:
         events = changelog_df
-        epochs = sorted(r[0] for r in events.select("batch_epoch").distinct().collect())
+        epoch_rows = dict(events.groupBy("batch_epoch").count().collect())
     lake = _ensure_lake(spark, cfg, events)
     lin = LineageStore(spark, cfg.lineage_path) if cfg.lineage_path else None
     if lin and cfg.track_run:
@@ -146,38 +161,59 @@ def ingest(
     total = JobCounter()
     result = RunResult(counters=total)
 
-    # one (epoch, pending partitions, batch) per epoch to apply. A fresh
-    # epoch commits whole, keyed over the CONFIGURED partition universe
-    # (no data read, no partition filter); a partially applied epoch (a
-    # resumed crash, the rerun-pending-ranges case of TrackRun.java:
-    # 48-71) pays one lazy partition distinct, which the batch_epoch=
-    # directory pruning limits to that epoch, and applies the rest in
-    # one commit; a fully applied epoch is skipped with zero reads
-    # (assumes partition values < num_partitions, which the changelog
-    # writer guarantees).
+    # one (epochs, pending partitions, batch) per commit. Fresh epochs
+    # commit whole, keyed over the CONFIGURED partition universe (no data
+    # read, no partition filter), in groups: a fresh epoch joins the open
+    # group while the group's rows stay within cfg.epoch_size and the
+    # group holds fewer than compact_every epochs. A partially applied
+    # epoch (a resumed crash, the rerun-pending-ranges case of
+    # TrackRun.java:48-71) closes the open group and runs alone: it pays
+    # one lazy partition distinct, which the batch_epoch= directory
+    # pruning limits to that epoch, and applies the rest in one commit; a
+    # fully applied epoch is skipped with zero reads (assumes partition
+    # values < num_partitions, which the changelog writer guarantees).
     universe = set(range(cfg.num_partitions))
-    plan: list[tuple[int, list[int], DataFrame]] = []
-    for epoch in epochs:
-        batch = events.where(F.col("batch_epoch") == F.lit(epoch))
+    max_group = max(compact_every, 1)
+    plan: list[tuple[list[int], list[int], DataFrame | None]] = []
+    group_rows = None  # rows of the open group of fresh epochs (plan[-1])
+    for epoch in sorted(epoch_rows):
         applied_parts = applied_by_epoch.get(epoch, set())
+        rows = epoch_rows[epoch]
         if not applied_parts:
-            plan.append((epoch, sorted(universe), batch))
+            if group_rows is not None and group_rows + rows <= cfg.epoch_size \
+                    and len(plan[-1][0]) < max_group:
+                plan[-1][0].append(epoch)
+                group_rows += rows
+            else:
+                plan.append(([epoch], sorted(universe), None))
+                group_rows = rows
             continue
+        group_rows = None
+        batch = events.where(F.col("batch_epoch") == F.lit(epoch))
         pending = [] if applied_parts >= universe else sorted(
             {r[0] for r in batch.select("partition").distinct().collect()} - applied_parts
         )
         if pending:
-            plan.append((epoch, pending, batch.where(F.col("partition").isin(pending))))
+            plan.append(([epoch], pending, batch.where(F.col("partition").isin(pending))))
         else:
             result.epochs_skipped.append(epoch)
 
-    def stage(epoch: int, batch: DataFrame):
-        """Filter, fold and write one epoch's delta (no commit)."""
+    def stage(epochs: list[int], batch: DataFrame | None):
+        """Filter, fold and write one group's delta (no commit). The
+        counters come per epoch from two Observations: the rows read and
+        their max seq, and the rows past the origin filters, counted on a
+        private copy of ``batch_epoch`` (``origin_rows`` drops it)."""
+        if batch is None:
+            batch = events.where(F.col("batch_epoch").isin(epochs))
+        ep, seq = F.col("batch_epoch"), F.col(cfg.seq_col)
         obs_read, obs_pass = Observation(), Observation()
-        read = (F.count(F.lit(1)).alias("read"), F.max(cfg.seq_col).alias("max_seq"))
-        rows = origin_rows(batch.observe(obs_read, *read), cfg)
+        read = [a for e in epochs for a in (F.count(F.when(ep == e, 1)).alias(f"read_{e}"),
+                                            F.max(F.when(ep == e, seq)).alias(f"max_seq_{e}"))]
+        batch = batch.withColumn("_epoch", ep).observe(obs_read, *read)
+        rows = origin_rows(batch, cfg)
         salted = lww_strategy == "auto" and _has_hot_key(rows, cfg)
-        rows = rows.observe(obs_pass, F.count(F.lit(1)).alias("passed"))
+        passed = [F.count(F.when(F.col("_epoch") == e, 1)).alias(f"passed_{e}") for e in epochs]
+        rows = rows.observe(obs_pass, *passed).drop("_epoch")
         if salted:
             winners = lww_dedup_salted(rows, cfg.key_col, cfg.ts_col, cfg.seq_col, cfg.salt_buckets)
         else:
@@ -186,45 +222,52 @@ def ingest(
         # same pipeline re-applied by expected_state for verification)
         return lake.stage_delta(apply_features(winners, cfg)), obs_read, obs_pass, salted
 
-    def commit(epoch: int, parts: list[int], staged_future) -> bool:
-        """Publish one staged epoch, book its counters and lineage;
-        returns whether a compaction is due."""
+    def commit(epochs: list[int], parts: list[int], staged_future) -> bool:
+        """Publish one staged group, book each epoch's counters and
+        lineage; returns whether a compaction is due."""
         staged, obs_read, obs_pass, salted = staged_future.result()
         try:
-            lake.commit_staged_delta(staged, [f"{p}:{epoch}{scope}" for p in parts])
-            read, passed_n = obs_read.get, obs_pass.get["passed"]
-            read_n, max_seq = read["read"], read["max_seq"]
-            jc = JobCounter()
-            jc.add("READ", read_n)
-            jc.add("WRITE", passed_n)
-            jc.add("SKIPPED", read_n - passed_n)
-            total.merge(jc)
-            if lin and cfg.track_run:
-                lin.record_batch(cfg.run_id, parts, epoch, "PASS", jc.as_dict(),
-                                 watermark_seq=-1 if max_seq is None else max_seq,
-                                 prev_run_id=cfg.prev_run_id)
+            lake.commit_staged_delta(staged, [f"{p}:{e}{scope}" for e in epochs for p in parts])
+            read, passed = obs_read.get, obs_pass.get
+            for e in epochs:
+                read_n, max_seq = read[f"read_{e}"], read[f"max_seq_{e}"]
+                passed_n = passed[f"passed_{e}"]
+                jc = JobCounter()
+                jc.add("READ", read_n)
+                jc.add("WRITE", passed_n)
+                jc.add("SKIPPED", read_n - passed_n)
+                total.merge(jc)
+                if lin and cfg.track_run:
+                    lin.record_batch(cfg.run_id, parts, e, "PASS", jc.as_dict(),
+                                     watermark_seq=-1 if max_seq is None else max_seq,
+                                     prev_run_id=cfg.prev_run_id)
         except Exception:
             if lin and cfg.track_run:
-                lin.record_batch(cfg.run_id, parts, epoch, "FAIL", prev_run_id=cfg.prev_run_id)
+                for e in epochs:
+                    lin.record_batch(cfg.run_id, parts, e, "FAIL", prev_run_id=cfg.prev_run_id)
             raise
         if salted:
-            result.epochs_salted.append(epoch)
-        result.epochs_applied.append(epoch)
-        return bool(compact_every) and len(result.epochs_applied) % compact_every == 0
+            result.epochs_salted.extend(epochs)
+        before = len(result.epochs_applied)
+        result.epochs_applied.extend(epochs)
+        # groups step by several epochs: due when the count crosses a
+        # multiple of compact_every
+        return bool(compact_every) and \
+            len(result.epochs_applied) // compact_every > before // compact_every
 
-    # two-deep epoch pipeline: epoch k+1's scan+filter+LWW (the
-    # Spark-heavy part) STAGES on a worker thread while epoch k's
+    # two-deep group pipeline: group k+1's scan+filter+LWW (the
+    # Spark-heavy part) STAGES on a worker thread while group k's
     # manifest commit + lineage run — the serial epoch loop was the
     # measured residual in the N->4N scaling evidence.
     # Commits stay strictly ordered, so resume/exactly-once semantics
-    # are unchanged; a staged-but-uncommitted epoch is an orphan dir.
+    # are unchanged; a staged-but-uncommitted group is an orphan dir.
     # On failure, shutdown waits for a running stage: nothing writes
     # into the lake after ingest has raised.
     pool = ThreadPoolExecutor(max_workers=2)
-    inflight: deque = deque()  # (epoch, parts, future)
+    inflight: deque = deque()  # (epochs, parts, future)
     try:
-        for epoch, parts, batch in plan:
-            inflight.append((epoch, parts, pool.submit(stage, epoch, batch)))
+        for epochs, parts, batch in plan:
+            inflight.append((epochs, parts, pool.submit(stage, epochs, batch)))
             due = False
             while len(inflight) >= 2:
                 due |= commit(*inflight.popleft())
@@ -272,20 +315,35 @@ def _has_hot_key(rows: DataFrame, cfg: EngineConfig) -> bool:
     return mx > max(cfg.skew_min_rows, tot / cfg.num_partitions)
 
 
-def _epochs_from_wal_dirs(path: str) -> list[int]:
-    """Epoch plan from the WAL's hive layout (``batch_epoch=N`` dirs) —
-    pure metadata, zero event rows read. On an object store this is one
-    LIST call; here it's a local listdir."""
+def _epochs_from_wal_dirs(path: str) -> dict[int, int]:
+    """``{epoch: rows}`` from the WAL's hive layout (``batch_epoch=N``
+    dirs), the rows summed from the parquet footers of each dir's data
+    files on the driver — pure metadata, zero event rows read, no Spark
+    job. Names starting with ``_`` or ``.`` are skipped, as Spark's file
+    index skips them. On an object store this is one LIST call plus a
+    footer read per file; here it's a local walk."""
     import os
 
-    epochs = []
+    import pyarrow.parquet as pq
+
+    def visible(name: str) -> bool:
+        return not name.startswith(("_", "."))
+
+    epoch_rows = {}
     for name in os.listdir(path):
-        if name.startswith("batch_epoch="):
-            try:
-                epochs.append(int(name.split("=", 1)[1]))
-            except ValueError:
-                continue
-    return sorted(epochs)
+        if not name.startswith("batch_epoch="):
+            continue
+        try:
+            epoch = int(name.split("=", 1)[1])
+        except ValueError:
+            continue
+        rows = 0
+        for root, dirs, files in os.walk(os.path.join(path, name)):
+            dirs[:] = filter(visible, dirs)
+            rows += sum(pq.read_metadata(os.path.join(root, f)).num_rows
+                        for f in filter(visible, files))
+        epoch_rows[epoch] = rows
+    return epoch_rows
 
 
 def _ensure_lake(spark: SparkSession, cfg: EngineConfig, events: DataFrame) -> LakeTable:

@@ -30,8 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _payload(df: DataFrame, tie_col: str | None = None):
-    return F.struct(*[F.col(c) for c in df.columns if c != tie_col])
+def _payload(df: DataFrame, *skip: str | None):
+    return F.struct(*[F.col(c) for c in df.columns if c not in skip])
 
 
 def _order(ts_col: str, seq_col: str, tie_col: str | None = None):
@@ -55,11 +55,16 @@ def lww_dedup(
     """One row per key: the event with the largest (ts, seq).
 
     ``tie_col`` breaks exact (ts, seq) ties (ordered after seq) and is
-    left out of the output."""
+    left out of the output. The key column is the grouping column, not a
+    field of the winning struct, so a filter on the key above the fold
+    pushes through it into the scan: a point lookup over pending deltas
+    reads only its keys' rows."""
+    win = F.max_by(_payload(df, key_col, tie_col), _order(ts_col, seq_col, tie_col))
+    w = F.col("_w")
     return (
         df.groupBy(key_col)
-        .agg(F.max_by(_payload(df, tie_col), _order(ts_col, seq_col, tie_col)).alias("_w"))
-        .select("_w.*")
+        .agg(win.alias("_w"))
+        .select(*[c if c == key_col else w[c].alias(c) for c in df.columns if c != tie_col])
     )
 
 

@@ -529,7 +529,8 @@ def test_crash_between_link_and_hint_resumes(spark, events, tmp_path, monkeypatc
 
 
 FAULT_PARTITIONS = 4
-# an uncrashed run over 4 epochs with compact_every=2 commits 7 times:
+# an uncrashed run over 4 epochs with compact_every=2 commits 7 times
+# when each epoch is its own group (epoch_size = the WAL's epoch size):
 # create (v1), then twice two epoch deltas and a compaction
 FAULT_EPOCHS, FAULT_COMMITS = 4, 7
 # (point, k): the k-th commit crashes at its link or hint write, or the
@@ -537,6 +538,13 @@ FAULT_EPOCHS, FAULT_COMMITS = 4, 7
 FAULT_POINTS = [(p, k) for p in ("link", "hint") for k in range(1, FAULT_COMMITS + 1)] + [
     (p, k) for p in ("stage", "staged") for k in range(1, FAULT_EPOCHS + 1)
 ]
+# at make_cfg's budget (EPOCH rows) the same run coalesces the epochs in
+# pairs (a group holds fewer than compact_every epochs) and commits 4
+# times: create, group [0, 1], group [2, 3], a compaction
+COALESCED_GROUPS, COALESCED_COMMITS = 2, 4
+COALESCED_POINTS = [
+    (p, k) for p in ("link", "hint") for k in range(1, COALESCED_COMMITS + 1)
+] + [(p, k) for p in ("stage", "staged") for k in range(1, COALESCED_GROUPS + 1)]
 
 
 @pytest.fixture(scope="module")
@@ -548,10 +556,10 @@ def small_events(spark):
     return df
 
 
-@pytest.fixture(scope="module")
-def uncrashed(spark, small_events, tmp_path_factory):
-    """(rows of an uncrashed lake, rows of the verify fold), by url."""
-    cfg = make_cfg(tmp_path_factory.mktemp("uncrashed"), num_partitions=FAULT_PARTITIONS)
+def _uncrashed_run(spark, small_events, root, n_commits, **kw):
+    """(rows of an uncrashed lake, rows of the verify fold), by url; the
+    run links ``n_commits`` manifest versions."""
+    cfg = make_cfg(root, num_partitions=FAULT_PARTITIONS, **kw)
     links, link = [], os.link
 
     def counted_link(src, dst):
@@ -561,9 +569,44 @@ def uncrashed(spark, small_events, tmp_path_factory):
     with pytest.MonkeyPatch.context() as m:
         m.setattr(os, "link", counted_link)
         ingest(spark, cfg, changelog_df=small_events, compact_every=2)
-    assert len(links) == FAULT_COMMITS
+    assert len(links) == n_commits
     lake = LakeTable(spark, cfg.lake_path)
     return lake.read().orderBy("url").collect(), _expected_rows(lake, small_events, cfg)
+
+
+@pytest.fixture(scope="module")
+def uncrashed_coalesced(spark, small_events, tmp_path_factory):
+    return _uncrashed_run(
+        spark, small_events, tmp_path_factory.mktemp("coalesced"), COALESCED_COMMITS
+    )
+
+
+@pytest.fixture(scope="module")
+def uncrashed(spark, small_events, tmp_path_factory):
+    """(rows of an uncrashed lake, rows of the verify fold), by url."""
+    return _uncrashed_run(spark, small_events, tmp_path_factory.mktemp("uncrashed"),
+                          FAULT_COMMITS, epoch_size=800 // FAULT_EPOCHS)
+
+
+def _crash_then_resume_exactly(spark, small_events, cfg, monkeypatch, point, k, want_rows):
+    """Crash one ingest run at ``(point, k)``, rerun it, and check the
+    lake against ``want_rows``: every key applied once, and after
+    ``vacuum(retain_last=1)`` no data file outside the head snapshot."""
+    with monkeypatch.context() as m:
+        (_crash_stage if point.startswith("stage") else _crash_commit)(m, point, k)
+        with pytest.raises(OSError, match="injected crash"):
+            ingest(spark, cfg, changelog_df=small_events, compact_every=2)
+    ingest(spark, cfg, changelog_df=small_events, compact_every=2)
+    lake = LakeTable(spark, cfg.lake_path)
+    _assert_lake_exact(lake, want_rows, small_events, FAULT_PARTITIONS)
+    lake.vacuum(retain_last=1)
+    _assert_lake_exact(lake, want_rows, small_events, FAULT_PARTITIONS)
+    on_disk = {
+        os.path.relpath(os.path.join(d, f), cfg.lake_path)
+        for d, _, fs in os.walk(os.path.join(cfg.lake_path, "data"))
+        for f in fs if f.endswith(".parquet")
+    }
+    assert on_disk == set(lake.manifest().files())
 
 
 @pytest.mark.parametrize("point,k", FAULT_POINTS)
@@ -577,24 +620,25 @@ def test_commit_fault_matrix_resumes_exactly(
     and no commit key is applied twice. ``vacuum(retain_last=1)`` then
     leaves no data file outside the head snapshot: orphan staged
     commit dirs are reclaimed."""
-    cfg = make_cfg(tmp_path, num_partitions=FAULT_PARTITIONS)
-    with monkeypatch.context() as m:
-        (_crash_stage if point.startswith("stage") else _crash_commit)(m, point, k)
-        with pytest.raises(OSError, match="injected crash"):
-            ingest(spark, cfg, changelog_df=small_events, compact_every=2)
-    ingest(spark, cfg, changelog_df=small_events, compact_every=2)
+    cfg = make_cfg(tmp_path, num_partitions=FAULT_PARTITIONS, epoch_size=800 // FAULT_EPOCHS)
     uncrashed_rows, expected_rows = uncrashed
     assert uncrashed_rows == expected_rows
-    lake = LakeTable(spark, cfg.lake_path)
-    _assert_lake_exact(lake, uncrashed_rows, small_events, FAULT_PARTITIONS)
-    lake.vacuum(retain_last=1)
-    _assert_lake_exact(lake, uncrashed_rows, small_events, FAULT_PARTITIONS)
-    on_disk = {
-        os.path.relpath(os.path.join(d, f), cfg.lake_path)
-        for d, _, fs in os.walk(os.path.join(cfg.lake_path, "data"))
-        for f in fs if f.endswith(".parquet")
-    }
-    assert on_disk == set(lake.manifest().files())
+    _crash_then_resume_exactly(spark, small_events, cfg, monkeypatch, point, k, uncrashed_rows)
+
+
+@pytest.mark.parametrize("point,k", COALESCED_POINTS)
+def test_coalesced_commit_fault_matrix_resumes_exactly(
+    spark, small_events, uncrashed, uncrashed_coalesced, tmp_path, monkeypatch, point, k
+):
+    """The same matrix over the default (coalesced) plan: each of its 4
+    commits crashes at the link or the hint write, or each group's
+    stage before or after its data write. The resumed lake reads row
+    for row as the uncrashed coalesced lake, the per-epoch one and the
+    verify fold."""
+    cfg = make_cfg(tmp_path, num_partitions=FAULT_PARTITIONS)
+    coalesced_rows, expected_rows = uncrashed_coalesced
+    assert coalesced_rows == expected_rows == uncrashed[0]
+    _crash_then_resume_exactly(spark, small_events, cfg, monkeypatch, point, k, coalesced_rows)
 
 
 def test_failed_ingest_returns_after_staging_stops(spark, events, tmp_path, monkeypatch):

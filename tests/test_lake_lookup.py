@@ -7,6 +7,7 @@ only Spark job. The differential test pins that Python mirror to
 Spark's ``xxhash64`` / ``bucket_expr``; the semantics tests check that
 a lookup returns exactly the snapshot's rows for its keys."""
 
+import re
 from collections import Counter
 
 import pyspark.sql.functions as F
@@ -128,6 +129,17 @@ def test_lookup_equals_snapshot_filter_over_pending_delta(mor_lake):
     spread = [f"k{i}" for i in range(0, 40, 3)] + ["k2", "absent"]
     assert len({bucket_of(k, T.StringType(), 8) for k in spread}) > 3
     assert sum(_assert_lookup_is_snapshot(lake, spread).values()) == 14
+
+
+def test_lookup_over_pending_delta_pushes_its_key_into_the_scan(mor_lake):
+    """The LWW fold emits the key from its grouping column, so the
+    lookup's key filter pushes through the fold: every parquet scan of a
+    lookup over a pending delta reads only the key's rows."""
+    df = mor_lake.lookup(["k1"])
+    assert [r.value for r in df.collect()] == ["newer"]
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
+    assert pushed and all("EqualTo(key,k1)" in p for p in pushed), plan
 
 
 def test_lookup_as_of_on_ttl_table(spark, tmp_path):
